@@ -2,10 +2,10 @@
 (BASELINE.json:2,14): a Spark standalone master on localhost with 1 vs 4
 worker JVMs (8 cores / 16 GiB each, taskset-pinned to disjoint CPU sets),
 driven by ``spark-submit --py-files sparkcrawl.zip`` — the exact ship shape
-the north rule names. This supersedes BENCH/scaling.py's single-JVM
-local[N] stand-in: executors here are separate JVMs with isolated heaps/GC
-and real socket shuffles; the one resource still shared with the driver is
-the box's memory bandwidth (a real cluster would not share even that).
+the north rule names. Unlike a single-JVM local[N] run, executors here
+are separate JVMs with isolated heaps/GC and real socket shuffles; the one
+resource still shared with the driver is the box's memory bandwidth (a
+real cluster would not share even that).
 
 Measurement: two identical crawls per cluster size, the SECOND measured —
 warm JIT + warm Arrow worker pools, i.e. the steady state of a long-running

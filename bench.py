@@ -8,7 +8,8 @@ flagship crawl over a deterministic synthetic corpus. Prints ONE JSON line:
 
 Crawl throughput is computed from the pipeline's own metrics (scheduled /
 wall_ms per round) per BASELINE.md — Spark startup and corpus generation are
-excluded. Scaling evidence (local[8] vs local[32]) lives in BENCH/scaling.py.
+excluded. Scaling evidence (local[4] vs local[16] over a 2-executor
+standalone cluster) lives in BENCH/cluster.py.
 """
 
 from __future__ import annotations
@@ -265,7 +266,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from sparkcrawl import synth
-    from sparkcrawl.queries import queries
+    from sparkcrawl.queries import queries, register_views
     from sparkcrawl.session import get_spark
 
     calib = machine_calib()
@@ -310,6 +311,9 @@ def main() -> None:
                 else []
             )
         )
+        # the stream warmup above registered the sf0.001 views; re-register
+        # sf_dir's now so the first index_build field doesn't absorb it
+        register_views(spark, sf_dir)
         for name in ("ann_ivf_multiprobe", "ann_pq", "media_ann"):
             t0 = time.monotonic()
             q[name](spark, sf_dir).count()

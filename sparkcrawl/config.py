@@ -159,7 +159,6 @@ class CrawlConfig:
     # construction; false positives resolved by the exact join). Sized here
     # for sandbox corpora — at the 10^10-URL design point raise bits/bucket
     # (and N_BUCKETS) so each blob holds ~n_keys/bucket at ~1% FPP.
-    dedup_bloom: bool = True
     bloom_bits_per_bucket: int = 1 << 17   # 16 KiB/bucket at n_buckets=32
     bloom_k: int = 7
     # Sidecar filter family (the north star names "bloom/cuckoo-filter URL-

@@ -2,7 +2,8 @@
 
 Every SQL-expressible operator family from SURVEY.md §2 plus the
 training-data-pipeline ops (dedup family, similarity search, text analysis)
-gets a (spark_fn, oracle_sql) pair. Design rules that make the driver's
+gets one ``REGISTRY`` entry: its Spark side, its DuckDB oracle and a
+one-line description. Design rules that make the driver's
 order-insensitive value-hash comparison deterministic:
 
 - shared ANSI SQL text between Spark and DuckDB wherever dialects agree
@@ -20,7 +21,11 @@ order-insensitive value-hash comparison deterministic:
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -57,8 +62,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     (~0.9 s × 44 ≈ 40 s, measured at sf0.1). The memo lives as an
     attribute ON the session object (dies with it, no id()-reuse hazard)
     and re-registers whenever the sf_dir changes or any view is missing
-    from the catalog (tests drop/replace individual views; the existence
-    sweep costs ~0.09 s)."""
+    from the catalog (the existence sweep costs ~0.09 s). A caller that
+    swaps in its own view must DROP it afterwards to invalidate the memo:
+    a view replaced in place (createOrReplaceTempView) still exists, so
+    later battery entries would silently read the replacement."""
     if getattr(spark, "_sparkcrawl_views_dir", None) == sf_dir and all(
         spark.catalog.tableExists(t) for t in TABLES
     ):
@@ -792,6 +799,10 @@ def _q_gopher_rules(engine: str) -> str:
             "list_max(list_transform(list_distinct(w), "
             "t -> len(list_filter(w, x -> x = t)))))[1]"
         )
+    # The WHERE keeps documents of 3+ tokens (the 3-gram signal needs one),
+    # so shorter documents get NO verdict row on either engine — not a
+    # kept=false row. A consumer wanting a full verdict table must treat a
+    # missing doc_id as dropped.
     return f"""
       SELECT doc_id, n_words, mean_word_len, stop_hits, top_token_frac,
              dup_3gram_frac,
@@ -1723,13 +1734,11 @@ def _q_link_filter(engine: str) -> str:
     """
 
 
-def _q_canonicalize(engine: str) -> str:
-    """Crawl-kernel canonicalization: Spark runs the real pandas UDF over a
-    constructed messy URL; DuckDB states the expected canonical form directly
-    (string algebra — the pinned canon of this constrained input)."""
-    if engine == "spark":
-        return None  # handled by a DataFrame fn (UDF), see below
-    return """
+# Crawl-kernel canonicalization: Spark runs the real pandas UDF over a
+# constructed messy URL (_canonicalize_spark); DuckDB states the expected
+# canonical form directly (string algebra — the pinned canon of this
+# constrained input).
+_CANONICALIZE_ORACLE = """
       SELECT doc_id,
              'http://ex.com/docs/' || source || '?Id=' || CAST(doc_id AS STRING)
                || '&a=1&b=2' AS canon_url
@@ -2450,98 +2459,6 @@ def _q_range_join(engine: str) -> str:
     """
 
 
-_SHARED_QUERIES: dict[str, Callable[[str], str | None]] = {
-    "seen_antijoin": _q_seen_antijoin,
-    # round 5: Gopher composite quality rules (map-only text pass) — new
-    # entry, so it leads the mid-window and gets a driver signal this round
-    "gopher_rules": _q_gopher_rules,
-    "perhost_topk": _q_perhost_topk,
-    "priority_order": _q_priority_order,
-    "depth_histogram": _q_depth_histogram,
-    "status_counts": _q_status_counts,
-    "broadcast_join": _q_broadcast_join,
-    "json_extract": _q_json_extract,
-    "window_hourly": _q_window_hourly,
-    "sessionize": _q_sessionize,
-    "union_distinct": _q_union_distinct,
-    "intersect_users": _q_intersect_users,
-    # round 4k: the two joins Spark lacks natively (SURVEY §2 custom-operator
-    # seam) — as-of (union-tag + running-MAX window) and range (bucketed
-    # equi-join vs the oracle's inequality join)
-    "asof_join": _q_asof_join,
-    "range_join": _q_range_join,
-    "tpch_q1": _q_tpch_q1,
-    "tpch_q3": _q_tpch_q3,
-    "tpch_q5": _q_tpch_q5,
-    "tpch_q4": _q_tpch_q4,
-    "tpch_q6": _q_tpch_q6,
-    "tpch_q7": _q_tpch_q7,
-    "tpch_q10": _q_tpch_q10,
-    "tpch_q14": _q_tpch_q14,
-    "tpch_q18": _q_tpch_q18,
-    "tpch_q2": _q_tpch_q2,
-    "tpch_q8": _q_tpch_q8,
-    "tpch_q9": _q_tpch_q9,
-    "tpch_q11": _q_tpch_q11,
-    "tpch_q12": _q_tpch_q12,
-    "tpch_q13": _q_tpch_q13,
-    "tpch_q15": _q_tpch_q15,
-    "tpch_q16": _q_tpch_q16,
-    "tpch_q17": _q_tpch_q17,
-    "tpch_q19": _q_tpch_q19,
-    "tpch_q20": _q_tpch_q20,
-    "tpch_q21": _q_tpch_q21,
-    "tpch_q22": _q_tpch_q22,
-    "dedup_exact": _q_dedup_exact,
-    "token_stats": _q_token_stats,
-    "langid": _q_langid,
-    "quality_score": _q_quality_score,
-    "doc_fingerprint": _q_doc_fingerprint,
-    "stratified_sample": _q_stratified_sample,
-    "repetition_ratio": _q_repetition_ratio,
-    "top_terms": _q_top_terms,
-    "length_percentiles": _q_length_percentiles,
-    "boilerplate_ngrams": _q_boilerplate_ngrams,
-    "contamination": _q_contamination,
-    "tfidf_top_terms": _q_tfidf_top_terms,
-    "pack_sequences": _q_pack_sequences,
-    "lm_perplexity": _q_lm_perplexity,
-    "dsir_weights": _q_dsir_weights,
-    "host_quality": _q_host_quality,
-    "filter_funnel": _q_filter_funnel,
-    "pii_redact": _q_pii_redact,
-    "dup_spans": _q_dup_spans,
-    "shard_assign": _q_shard_assign,
-    "pagerank": _q_pagerank,
-    "paragraph_dedup": _q_paragraph_dedup,
-    "minhash_signatures": _q_minhash_signatures,
-    "minhash_lsh_pairs": _q_minhash_lsh_pairs,
-    "simhash": _q_simhash,
-    "ngram_jaccard": _q_ngram_jaccard,
-    "ann_bruteforce": _q_ann_bruteforce,
-    "ann_ivf": _q_ann_ivf,
-    "ann_ivf_multiprobe": _q_ann_ivf_multiprobe,
-    # round 4l: product-quantization ANN (codes + ADC table + re-rank)
-    "ann_pq": _q_ann_pq,
-    "embed_neardup": _q_embed_neardup,
-    "semdedup": _q_semdedup,
-    "kmeans_embed": _q_kmeans_embed,
-    "winnowing": _q_winnowing,
-    "mixture_weights": _q_mixture_weights,
-    "bm25_search": _q_bm25_search,
-    "recrawl_priority": _q_recrawl_priority,
-    # round 4l: model-inference filtering (fastText/FineWeb-Edu scorer) and
-    # C4/RefinedWeb blocklist filtering — both map-only single text passes
-    "quality_classifier": _q_quality_classifier,
-    "badwords_filter": _q_badwords_filter,
-    "embed_norms": _q_embed_norms,
-    "event_pivot": _q_event_pivot,
-    "multimodal_bytes": _q_multimodal_bytes,
-    "link_filter": _q_link_filter,
-    "rolling_avg": _q_rolling_avg,
-}
-
-
 def _dup_spans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DataFrame twin of _q_dup_spans: the shared SQL references the `grams`
     # CTE twice (dup detection + join-back) and Spark inlines CTEs, so the
@@ -2581,14 +2498,6 @@ def _dup_spans_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dup_ratio_micro"),
         )
     )
-
-
-def _make_sql_query(builder: Callable[[str], str]):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(builder("spark"))
-
-    return run
 
 
 def _ivf_index_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3269,7 +3178,6 @@ def _drain_available_now(spark: SparkSession, sf_dir: str, prefix: str,
     a memory sink, and return the drained table. One definition so a fix to
     the staging/checkpoint handling can't reach one twin and miss the
     other."""
-    import os
     import tempfile
     import uuid
 
@@ -3494,7 +3402,7 @@ _BPE_K = 12
 
 
 def _q_bpe_merges_oracle() -> str:
-    """DuckDB oracle for ``bpe_merges``: the identical 16-step merge
+    """DuckDB oracle for ``bpe_merges``: the identical ``_BPE_K``-step merge
     recurrence as chained MATERIALIZED CTEs — each step's argmax pair
     (count DESC, lhs ASC, rhs ASC) feeds the next step's merged state.
     MATERIALIZED is load-bearing: every state CTE is referenced twice
@@ -3619,92 +3527,6 @@ def _bpe_merges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows, "step int, lhs string, rhs string, pair_count long"
     ).orderBy("step")
 
-
-# The driver's CORRECTNESS gate checks only the FIRST 50 entries of
-# queries() in dict order (verified in VERDICT r3: checked set ==
-# list(queries())[:50]). Every entry that has not yet accumulated a
-# driver-green row therefore MUST sit inside that window; the entries we
-# defer past it are redundant TPC-H join/agg shapes that were driver-green
-# in rounds 1–3 and are the most substitutable coverage-wise (the in-window
-# set keeps q1/q3/q5/q6/q10/q14/q15/q18/q19/q21/q22 — scan-agg, join-agg,
-# EXISTS, NOT-EXISTS anti-join, group-having shapes all still represented).
-_DEFERRED_PAST_DRIVER_WINDOW = [
-    "tpch_q2", "tpch_q4", "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q11",
-    "tpch_q12", "tpch_q13", "tpch_q16", "tpch_q17", "tpch_q20",
-    # round 4: five more rounds-1–3-green shapes overflow to make room for
-    # boilerplate_ngrams/contamination/tfidf_top_terms/pack_sequences/
-    # stream_window_counts — the kept set q1/q3/q5/q6/q18/q21 still spans
-    # scan-agg, join-agg, pushdown scan, group-having, EXISTS/NOT-EXISTS
-    "tpch_q10", "tpch_q14", "tpch_q15", "tpch_q19", "tpch_q22",
-    # round 4b: q18 (join-agg + group-having, green r1–r3) overflows to make
-    # room for pagerank; q1/q3/q5/q6/q21 keep every TPC-H shape family
-    "tpch_q18",
-    # round 4c: q5 (join-agg, same family as the kept q3) overflows to make
-    # room for paragraph_dedup
-    "tpch_q5",
-    # round 4d: q21 overflows to make room for lm_perplexity; its
-    # NOT-EXISTS/anti-join family stays in-window via seen_antijoin (now
-    # non-vacuous) and the crawl pipeline's own O3 anti-joins
-    "tpch_q21",
-    # round 4e: q1/q3 overflow to make room for dsir_weights/host_quality;
-    # q6 (pushdown scan-agg) stays in-window, and q1's scan-agg /
-    # q3's join-agg families remain represented by status_counts,
-    # window_hourly, broadcast_join and host_quality itself
-    "tpch_q1", "tpch_q3",
-    # round 4f: q6 (the last in-window TPC-H, green r1–r3) overflows to make
-    # room for filter_funnel; its pushdown-scan-agg family remains
-    # represented in-window by link_filter and seen_antijoin (both carry
-    # parquet-pushed predicates over a scan-side filter)
-    "tpch_q6",
-    # round 4g: four rounds-1–3-green shapes each SUBSUMED by a stronger
-    # in-window sibling overflow to make room for pii_redact / dup_spans /
-    # shard_assign / semdedup (all new, no driver history):
-    # minhash_signatures' SQL is embedded verbatim inside minhash_lsh_pairs;
-    # ann_ivf's single-cell probe is ann_ivf_multiprobe with nprobe=1;
-    # window_hourly's window-agg family stays via rolling_avg + event_pivot;
-    # sessionize's gap-window family stays via rolling_avg's lag windows
-    "minhash_signatures", "ann_ivf", "window_hourly", "sessionize",
-    # round 4h: three more rounds-1–3-green shapes, each subsumed by a
-    # stronger in-window sibling, overflow to make room for kmeans_embed /
-    # winnowing / mixture_weights (all new, no driver history):
-    # token_stats' token counting runs inside lm_perplexity, pack_sequences
-    # and mixture_weights; langid's per-doc linear-scan heuristic family
-    # stays via quality_score + repetition_ratio; doc_fingerprint's
-    # hash-fingerprint family stays via dup_spans, paragraph_dedup and
-    # winnowing itself
-    "token_stats", "langid", "doc_fingerprint",
-    # round 4i: two more rounds-1–3-green shapes overflow to make room for
-    # bm25_search / recrawl_priority (both new, no driver history):
-    # top_terms' term-frequency ranking is the in-window tfidf_top_terms
-    # minus the idf weighting; ann_bruteforce's exact-cosine top-k formula
-    # runs verbatim inside the in-window ann_ivf_multiprobe's verify stage
-    # (bruteforce exists as the recall baseline, not a distinct shape)
-    "top_terms", "ann_bruteforce",
-    # round 4j: stratified_sample (r1–r3 green) overflows to make room for
-    # stream_stateful_totals — its hash-mod sampling primitive runs
-    # verbatim inside the in-window shard_assign (TOKHASH % shards) and
-    # mixture_weights (hash-fraction Bernoulli)
-    "stratified_sample",
-    # round 4k: dedup_exact / repetition_ratio (r1–r3 green) overflow to
-    # make room for asof_join / range_join — exact hash-groupBy dedup runs
-    # at finer granularity inside the in-window paragraph_dedup and
-    # dedup_components; the repetition signal is subsumed by the in-window
-    # dup_spans (exact repeated-span detection) and filter_funnel's
-    # unique-token-ratio stage
-    "dedup_exact", "repetition_ratio",
-    # round 4l: depth_histogram / union_distinct (r1–r3 green) overflow to
-    # make room for quality_classifier / badwords_filter — the groupBy-count
-    # histogram shape stays in-window via status_counts (identical shape
-    # over the same pipeline snapshot) and length_percentiles; the
-    # union-then-distinct shape runs verbatim inside the in-window
-    # asof_join (union-tagged streams) and paragraph_dedup's distinct
-    "depth_histogram", "union_distinct",
-    # round 4l (cont.): intersect_users (r1–r3 green) overflows to make
-    # room for ann_pq — the intersect/semi-join family stays in-window via
-    # contamination (n-gram semi-join against the benchmark set) and
-    # seen_antijoin's EXISTS/NOT-EXISTS pair
-    "intersect_users",
-]
 
 def _paragraph_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DataFrame twin of the shared SQL: the WITH ch AS (...) subquery feeds
@@ -4051,126 +3873,293 @@ def _bm25_search_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") <= 20))
 
 
-# DataFrame twins where Spark's CTE inlining would recompute expensive
-# sketches per UNION branch (oracle SQL unchanged — same result sets), plus
-# the non-SQL entries (streaming gate, HLL rows-only check, mapInPandas
-# decode, iterative components). ann_ivf_multiprobe is the persisted-index
-# probe (build-once centroids table, VERDICT r2 #4).
-_DF_TWINS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "canonicalize": _canonicalize_spark,
-    "embed_neardup": _embed_neardup_spark,
-    "minhash_lsh_pairs": _minhash_lsh_pairs_spark,
-    "ngram_jaccard": _ngram_jaccard_spark,
-    "multimodal_decode": _multimodal_decode_spark,
-    "dedup_components": _dedup_components_spark,
-    "approx_users": _approx_users_spark,
-    "ann_ivf_multiprobe": _ann_ivf_multiprobe_spark,
-    # round 4l: persisted PQ codes/codebook index probe (build-once)
-    "ann_pq": _ann_pq_spark,
-    # §2.10 streaming gate: AvailableNow streaming dedup ≡ batch DISTINCT
-    "stream_dedup": _stream_dedup_spark,
-    # §2.10 streaming gate: watermark + tumbling-window agg ≡ batch GROUP BY
-    "stream_window_counts": _stream_window_counts_spark,
-    # §2.10 streaming gate: applyInPandasWithState running totals ≡ batch
-    "stream_stateful_totals": _stream_stateful_totals_spark,
-    # multimodal decode → persisted feature index → IVF probe, end to end
-    "media_ann": _media_ann_spark,
-    # round 4: single text pass / single edge build instead of CTE re-inline
-    "paragraph_dedup": _paragraph_dedup_spark,
-    "pagerank": _pagerank_spark,
-    # round 4: two-pass unigram-LM scoring, vocab persisted once
-    "lm_perplexity": _lm_perplexity_spark,
-    # round 4: DSIR importance weights (two-pass, micro-nat fixed point)
-    # and source-reputation filtering (one text pass + broadcast join-back)
-    "dsir_weights": _dsir_weights_spark,
-    "host_quality": _host_quality_spark,
-    # round 4g: single gram pass instead of CTE re-inline
-    "dup_spans": _dup_spans_spark,
-    # round 4h: quantize-once + literal-centroid Lloyd's; single shingle
-    # pass; single token-count pass + broadcast weight join-back
-    "kmeans_embed": _kmeans_embed_spark,
-    "winnowing": _winnowing_spark,
-    "mixture_weights": _mixture_weights_spark,
-    # round 4i: split-once projection + driver-side 1-row stats as literals
-    "bm25_search": _bm25_search_spark,
-    # round 5: distributed BPE tokenizer training — one corpus-sized
-    # word-count shuffle, then driver-paced merge iterations over the
-    # persisted vocabulary (the k-means scalar-build pattern)
-    "bpe_merges": _bpe_merges_spark,
+
+# ---------------------------------------------------------------------------
+# the battery registry: one entry per query
+# ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class Query:
+    """One battery entry. ``sql`` is the shared dialect-parameterized
+    builder (engine -> SQL text): it fills the DuckDB oracle and, unless
+    ``twin`` overrides it, the Spark side. A ``twin`` is a hand-built
+    DataFrame plan for where Spark's CTE inlining would recompute an
+    expensive sketch or text pass, or where the Spark side is not SQL at
+    all (UDF kernel, streaming gate, persisted-index probe, iterative
+    loop); it returns the same rows as the oracle. An entry with no shared
+    builder gives its ``oracle`` text directly."""
+
+    what: str  # one-line description (QUERIES.md)
+    sql: Callable[[str], str] | None = None
+    twin: Callable[[SparkSession, str], DataFrame] | None = None
+    oracle: str | None = None
+
+    def spark_fn(self) -> Callable[[SparkSession, str], DataFrame]:
+        if self.twin is not None:
+            return self.twin
+
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            register_views(spark, sf_dir)
+            return spark.sql(self.sql("spark"))
+
+        return run
+
+    def oracle_sql(self) -> str:
+        return self.oracle if self.sql is None else self.sql("duckdb")
+
+
+_TPCH = "TPC-H Q{} over the relational testdata tables"
+
+# Written in driver_window_order() over CORRECTNESS_r01–r05, so a checkout
+# without those records still puts the stalest entries in the window.
+REGISTRY: dict[str, Query] = {
+    "tpch_q8": Query(_TPCH.format(8), _q_tpch_q8),
+    "tpch_q9": Query(_TPCH.format(9), _q_tpch_q9),
+    "tpch_q11": Query(_TPCH.format(11), _q_tpch_q11),
+    "tpch_q12": Query(_TPCH.format(12), _q_tpch_q12),
+    "tpch_q13": Query(_TPCH.format(13), _q_tpch_q13),
+    "tpch_q16": Query(_TPCH.format(16), _q_tpch_q16),
+    "tpch_q17": Query(_TPCH.format(17), _q_tpch_q17),
+    "tpch_q20": Query(_TPCH.format(20), _q_tpch_q20),
+    "tpch_q15": Query(_TPCH.format(15), _q_tpch_q15),
+    "tpch_q19": Query(_TPCH.format(19), _q_tpch_q19),
+    "tpch_q22": Query(_TPCH.format(22), _q_tpch_q22),
+    "top_terms": Query(
+        "corpus top-k terms with deterministic tie-break (map-side combine)",
+        _q_top_terms),
+    "stratified_sample": Query(
+        "hash-mod stratified sample (shuffle-free, cluster-size-invariant)",
+        _q_stratified_sample),
+    "repetition_ratio": Query(
+        "Gopher repetition signal (repeated-line/ngram ratios per doc)",
+        _q_repetition_ratio),
+    "tpch_q4": Query(_TPCH.format(4), _q_tpch_q4),
+    "tpch_q7": Query(_TPCH.format(7), _q_tpch_q7),
+    "tpch_q10": Query(_TPCH.format(10), _q_tpch_q10),
+    "tpch_q14": Query(_TPCH.format(14), _q_tpch_q14),
+    "tpch_q5": Query(_TPCH.format(5), _q_tpch_q5),
+    "minhash_signatures": Query(
+        "8-fn MinHash signatures over 3-gram shingles", _q_minhash_signatures),
+    "ann_ivf": Query(
+        "IVF single-probe ANN (coarse cell prune + exact cosine)", _q_ann_ivf),
+    "token_stats": Query(
+        "token counts: whitespace + BPE-ish regex (one text pass)",
+        _q_token_stats),
+    "langid": Query("n-gram-heuristic language ID over documents", _q_langid),
+    "doc_fingerprint": Query(
+        "rolling-hash document fingerprints", _q_doc_fingerprint),
+    "depth_histogram": Query(
+        "crawl-depth histogram (groupBy count)", _q_depth_histogram),
+    "union_distinct": Query(
+        "union of two event slices + distinct", _q_union_distinct),
+    "intersect_users": Query(
+        "INTERSECT of two user sets", _q_intersect_users),
+    "embed_norms": Query(
+        "embedding L2 norms (vectorized aggregate over array column)",
+        _q_embed_norms),
+    "canonicalize": Query(
+        "URL canonicalization kernel parity over the documents table",
+        twin=_canonicalize_spark, oracle=_CANONICALIZE_ORACLE),
+    "perhost_topk": Query(
+        "per-host top-k by priority (the P3 budget window shape)",
+        _q_perhost_topk),
+    "priority_order": Query(
+        "deterministic global priority order with rank (O1)",
+        _q_priority_order),
+    "status_counts": Query(
+        "events per type (scan + groupBy count, map-side combine)",
+        _q_status_counts),
+    "broadcast_join": Query(
+        "fact-to-tiny-dim join (broadcast hash join, no fact shuffle)",
+        _q_broadcast_join),
+    "json_extract": Query(
+        "JSON field extraction + filter over event payloads", _q_json_extract),
+    "quality_score": Query(
+        "heuristic doc quality: length/punct/stopword ratios (one text pass)",
+        _q_quality_score),
+    "simhash": Query(
+        "16-bit SimHash near-dup buckets (bit-majority over token hashes)",
+        _q_simhash),
+    "embed_neardup": Query(
+        "SRP-LSH embedding near-dup (8x4-bit hyperplane sketch + exact "
+        "cosine verify)", _q_embed_neardup, twin=_embed_neardup_spark),
+    "ngram_jaccard": Query(
+        "banded-candidate n-gram Jaccard near-dup (exact verify on "
+        "candidates only)", _q_ngram_jaccard, twin=_ngram_jaccard_spark),
+    "seen_antijoin": Query(
+        "users with views but no high-value purchase (NOT EXISTS anti-join; "
+        "pushed predicate)", _q_seen_antijoin),
+    "gopher_rules": Query(
+        "Gopher composite quality rules: 5 signals + keep/drop verdict (one "
+        "map-only text pass)", _q_gopher_rules),
+    "approx_users": Query(
+        "HLL approx_count_distinct with a bounded-error check (exact count "
+        "+ estimate within ±5%)",
+        twin=_approx_users_spark, oracle=_APPROX_USERS_ORACLE),
+    "bpe_merges": Query(
+        f"distributed BPE tokenizer training: first {_BPE_K} merge rules "
+        "(one corpus shuffle, vocab-sized iterations)",
+        twin=_bpe_merges_spark, oracle=_q_bpe_merges_oracle()),
+    "tpch_q21": Query(_TPCH.format(21), _q_tpch_q21),
+    "tpch_q2": Query(_TPCH.format(2), _q_tpch_q2),
+    "asof_join": Query(
+        "as-of join: latest purchase at or before each view, per user",
+        _q_asof_join),
+    "range_join": Query(
+        "range join: per purchase, the same user's clicks in the next 24 h",
+        _q_range_join),
+    "boilerplate_ngrams": Query(
+        "5-gram doc-frequency boilerplate detection (split-once shingle "
+        "explode)", _q_boilerplate_ngrams),
+    "contamination": Query(
+        "benchmark n-gram decontamination (semi-join of doc shingles vs "
+        "probe set)", _q_contamination),
+    "tfidf_top_terms": Query(
+        "tf-idf top terms with rational idf (integer fixed point)",
+        _q_tfidf_top_terms),
+    "pack_sequences": Query(
+        "greedy sequence packing into fixed token budgets "
+        "(hash-deterministic)", _q_pack_sequences),
+    "lm_perplexity": Query(
+        "CCNet-style unigram-LM perplexity score (two-pass, micro-nat fixed "
+        "point)", _q_lm_perplexity, twin=_lm_perplexity_spark),
+    "dsir_weights": Query(
+        "DSIR importance weights: hashed-ngram likelihood ratio vs target",
+        _q_dsir_weights, twin=_dsir_weights_spark),
+    "host_quality": Query(
+        "per-host reputation aggregate joined back as a doc filter",
+        _q_host_quality, twin=_host_quality_spark),
+    "filter_funnel": Query(
+        "pipeline retention funnel across quality/dedup stages",
+        _q_filter_funnel),
+    "pii_redact": Query(
+        "PII detection + redaction (emails, phone numbers, IPv4)",
+        _q_pii_redact),
+    "dup_spans": Query(
+        "exact-substring span dedup (repeated 3-gram spans per doc)",
+        _q_dup_spans, twin=_dup_spans_spark),
+    "shard_assign": Query(
+        "deterministic global shuffle + training-shard assignment",
+        _q_shard_assign),
+    "pagerank": Query(
+        "5-iteration PageRank over the synthetic link graph (edges built "
+        "once)", _q_pagerank, twin=_pagerank_spark),
+    "paragraph_dedup": Query(
+        "paragraph-level exact dedup (hash-groupBy at paragraph granularity)",
+        _q_paragraph_dedup, twin=_paragraph_dedup_spark),
+    "ann_pq": Query(
+        "product-quantization ANN probe against the persisted codes index",
+        _q_ann_pq, twin=_ann_pq_spark),
+    "semdedup": Query(
+        "SemDeDup: cluster embeddings, then cosine dedup within clusters",
+        _q_semdedup),
+    "kmeans_embed": Query(
+        "Lloyd's k-means over the embedding table (k=8, unrolled rounds)",
+        _q_kmeans_embed, twin=_kmeans_embed_spark),
+    "winnowing": Query(
+        "winnowing document fingerprints (window-minimum 3-gram hashes)",
+        _q_winnowing, twin=_winnowing_spark),
+    "mixture_weights": Query(
+        "domain-mixture resampling manifest (per-doc repetition counts)",
+        _q_mixture_weights,
+        twin=_mixture_weights_spark),
+    "bm25_search": Query(
+        "BM25 top-20 retrieval over the documents table", _q_bm25_search,
+        twin=_bm25_search_spark),
+    "recrawl_priority": Query(
+        "freshness-driven recrawl scheduling", _q_recrawl_priority),
+    "quality_classifier": Query(
+        "linear quality-classifier inference over the documents table",
+        _q_quality_classifier),
+    "badwords_filter": Query(
+        "C4-style blocklist filtering", _q_badwords_filter),
+    "stream_dedup": Query(
+        "AvailableNow streaming dedup over events ≡ batch DISTINCT",
+        twin=_stream_dedup_spark, oracle=_STREAM_DEDUP_ORACLE),
+    "stream_window_counts": Query(
+        "AvailableNow watermark + 1-hour tumbling-window counts ≡ batch "
+        "GROUP BY", twin=_stream_window_counts_spark,
+        oracle=_STREAM_WINDOW_COUNTS_ORACLE),
+    "stream_stateful_totals": Query(
+        "applyInPandasWithState per-user running totals ≡ batch aggregate",
+        twin=_stream_stateful_totals_spark,
+        oracle=_STREAM_STATEFUL_TOTALS_ORACLE),
+    "media_ann": Query(
+        "ANN over decoded media features (decode → persisted index → IVF "
+        "probe)", twin=_media_ann_spark, oracle=_MEDIA_ANN_ORACLE),
+    "tpch_q6": Query(_TPCH.format(6), _q_tpch_q6),
+    "tpch_q18": Query(_TPCH.format(18), _q_tpch_q18),
+    "length_percentiles": Query(
+        "exact length percentiles per language stratum",
+        _q_length_percentiles),
+    "event_pivot": Query(
+        "per-user event-type pivot (groupBy + conditional aggregation)",
+        _q_event_pivot),
+    "multimodal_bytes": Query(
+        "per-media-type byte totals over binary payload metadata",
+        _q_multimodal_bytes),
+    "link_filter": Query(
+        "F4 allow/deny regex + deny_extensions over candidate links (native "
+        "rlike)", _q_link_filter),
+    "rolling_avg": Query(
+        "per-user rolling average over an ordered event window",
+        _q_rolling_avg),
+    "multimodal_decode": Query(
+        "multimodal decode through the real mapInPandas plumbing",
+        twin=_multimodal_decode_spark, oracle=_MULTIMODAL_DECODE_ORACLE),
+    "dedup_components": Query(
+        "near-dup clusters: connected components over the MinHash-LSH pair "
+        "graph, survivor = min doc_id",
+        twin=_dedup_components_spark, oracle=_q_dedup_components_oracle()),
+    "tpch_q1": Query(_TPCH.format(1), _q_tpch_q1),
+    "tpch_q3": Query(_TPCH.format(3), _q_tpch_q3),
+    "dedup_exact": Query(
+        "exact content-hash dedup (hash-partitioned groupBy)", _q_dedup_exact),
+    "window_hourly": Query(
+        "tumbling hourly window aggregation over event time",
+        _q_window_hourly),
+    "sessionize": Query(
+        "gap-based sessionization (lag window + cumulative session ids)",
+        _q_sessionize),
+    "ann_bruteforce": Query(
+        "exact cosine top-k (the O(n) recall baseline, 1-row broadcast side)",
+        _q_ann_bruteforce),
+    "ann_ivf_multiprobe": Query(
+        "IVF nprobe=3 probe against the persisted centroid index",
+        _q_ann_ivf_multiprobe, twin=_ann_ivf_multiprobe_spark),
+    "minhash_lsh_pairs": Query(
+        "MinHash-LSH candidate pairs (banded sketch, ONE band equi-join)",
+        _q_minhash_lsh_pairs, twin=_minhash_lsh_pairs_spark),
 }
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Driver-window ROTATION (VERDICT r4 #4): the driver hard-checks only
-# list(queries())[:50] of the 87-entry battery, so entries parked past the
-# window accumulate rounds with no driver signal (worst case after r4: 37
-# entries last driver-green in r3). Policy, pinned by
-# tests/test_queries.py::test_driver_window_rotation_policy — each round,
-# swap ~10 of the stalest deferred entries back into the window in place of
-# 10 multiply-green (≥3 driver-green rounds) residents, so every battery
-# entry's last driver-green row stays ≤3 rounds old. Entries whose
-# implementation changed in the current round always stay in-window.
-#
-# Round 5 rotation: IN = 10 r3-stale entries spanning distinct shape
-# families (scan-agg, join-agg, pushdown scan, group-having, EXISTS/NOT
-# EXISTS, correlated-min multi-join, exact dedup, window agg, gap
-# sessionization, exact-cosine recall baseline); OUT = 10 residents that
-# are driver-green in all of r1–r4 and whose families remain represented
-# in-window (seen_antijoin keeps the anti-join anchor, minhash_lsh_pairs
-# the banded-dedup anchor, canonicalize the D1 kernel, length_percentiles
-# the percentile/histogram family, ann_ivf_multiprobe + ann_pq the probe
-# family — both also changed this round via the index-store refactor).
-_ROTATE_IN_R5 = [
-    "tpch_q1", "tpch_q3", "tpch_q6", "tpch_q18", "tpch_q21", "tpch_q2",
-    "dedup_exact", "window_hourly", "sessionize", "ann_bruteforce",
-]
-_ROTATE_OUT_R5 = [
-    "perhost_topk", "priority_order", "status_counts", "broadcast_join",
-    "json_extract", "quality_score", "simhash", "embed_norms",
-    "embed_neardup", "ngram_jaccard",
-    # makes room for the new round-5 gopher_rules entry: green r1–r4, and
-    # its NOT-EXISTS family stays in-window via the rotated-in tpch_q21
-    "seen_antijoin",
-    # makes room for the new round-5 bpe_merges entry: green r1/r2/r4, and
-    # the D1 canonicalization kernel stays driver-exercised through
-    # entry()'s full crawl plus the canon test suite
-    "canonicalize",
-]
+
+def driver_window_order() -> list[str]:
+    """REGISTRY names in the order the driver's CORRECTNESS gate should see
+    them: it checks only the first 50 entries of queries(). Reads the
+    recorded ``CORRECTNESS_r<N>.json`` files at the repo root and sorts:
+    entries with no green row first, then by last green round (oldest
+    first), then by fewest green rounds, then in registry order. Each new
+    record thus rotates the stalest entries into the window by itself."""
+    green: dict[str, list[int]] = {}
+    for fname in os.listdir(_REPO):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if not m:
+            continue
+        with open(os.path.join(_REPO, fname)) as f:
+            for name, row in json.load(f).items():
+                if (row.get("rows_match") and row.get("schema_match")
+                        and (row.get("hash_match")
+                             or row.get("err") == "no_oracle")):
+                    green.setdefault(name, []).append(int(m.group(1)))
+    return sorted(REGISTRY, key=lambda n: (
+        n in green, max(green.get(n, [0])), len(green.get(n, []))))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, builder in _SHARED_QUERIES.items():
-        if name not in _DEFERRED_PAST_DRIVER_WINDOW:
-            out[name] = _make_sql_query(builder)
-    for name, fn in _DF_TWINS.items():
-        out[name] = fn
-    for name in _DEFERRED_PAST_DRIVER_WINDOW:
-        out[name] = _make_sql_query(_SHARED_QUERIES[name])
-    # apply the rotation: rotated-in entries lead the window, rotated-out
-    # residents take their places at the tail (functions unchanged — only
-    # dict order moves, which is what the driver's [:50] gate reads)
-    rot_in = [n for n in _ROTATE_IN_R5 if n in out]
-    rot_out = [n for n in _ROTATE_OUT_R5 if n in out]
-    mid = [n for n in out if n not in rot_in and n not in rot_out]
-    return {n: out[n] for n in rot_in + mid + rot_out}
+    return {n: REGISTRY[n].spark_fn() for n in driver_window_order()}
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for name in queries():
-        if name in _SHARED_QUERIES:
-            out[name] = _SHARED_QUERIES[name]("duckdb")
-    out["canonicalize"] = _q_canonicalize("duckdb")
-    out["multimodal_decode"] = _MULTIMODAL_DECODE_ORACLE
-    out["dedup_components"] = _q_dedup_components_oracle()
-    out["stream_dedup"] = _STREAM_DEDUP_ORACLE
-    out["stream_window_counts"] = _STREAM_WINDOW_COUNTS_ORACLE
-    out["stream_stateful_totals"] = _STREAM_STATEFUL_TOTALS_ORACLE
-    out["media_ann"] = _MEDIA_ANN_ORACLE
-    # approx_users: bounded-error HLL check — the oracle pins the exact
-    # distinct count and expects approx_ok = 1 (estimate within ±5%)
-    out["approx_users"] = _APPROX_USERS_ORACLE
-    # bpe_merges: the identical merge recurrence as chained MATERIALIZED
-    # CTEs (data-dependent argmax per step — no shared dialect-dual form)
-    out["bpe_merges"] = _q_bpe_merges_oracle()
-    return out
+    return {n: REGISTRY[n].oracle_sql() for n in driver_window_order()}

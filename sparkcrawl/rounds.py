@@ -163,32 +163,12 @@ def prepare_pages(
     # per-round scan proportional to the redirect population instead.
     redirects = (
         store.read(spark, "pages_idx", snap)
-        .filter(_followable_3xx())
+        .filter((F.col("status") >= 300) & (F.col("status") < 400)
+                & F.col("location").isNotNull())
         .select("bucket", "url_hash", "canon", "page_url", "status", "location")
     )
     store.overwrite("redirects_idx", redirects, partition_by=["bucket"])
     return snap
-
-
-def _followable_3xx():
-    """The one definition of 'followable redirect row' (3xx with a
-    Location): shared by prepare_pages' index build, the legacy-store
-    fallback, and the corpus-caps probe so they can never diverge."""
-    return ((F.col("status") >= 300) & (F.col("status") < 400)
-            & F.col("location").isNotNull())
-
-
-def redirect_index(spark: SparkSession, store: SnapStore,
-                   pages_idx: DataFrame) -> DataFrame:
-    """Slim source for the per-round redirect leg: the one-time
-    ``redirects_idx`` table when present (only followable-3xx rows, no html
-    — VERDICT r3 #4), else the pruned pages_idx scan for stores prepared
-    before the table existed."""
-    if store.exists("redirects_idx"):
-        return store.read(spark, "redirects_idx")
-    return pages_idx.select(
-        "bucket", "url_hash", "canon", "page_url", "status", "location",
-    ).filter(_followable_3xx())
 
 
 def init_crawl(spark: SparkSession, store: SnapStore, seeds_path: str,
@@ -214,7 +194,7 @@ def init_crawl(spark: SparkSession, store: SnapStore, seeds_path: str,
     # by the retry (duplicate seed keys would fan out the dedup left join)
     s_snap = store.append("seen", seen, partition_by=["bucket"], parent=None)
     tables = {"frontier": f_snap, "seen": s_snap}
-    if cfg.dedup_bloom and n_seeds >= cfg.bloom_min_seen:
+    if n_seeds >= cfg.bloom_min_seen:
         blobs = merge_bucket_blobs(
             fr, empty_sidecar(spark), cfg.bloom_bits_per_bucket, cfg.bloom_k,
             kind=cfg.seen_filter_kind,
@@ -242,10 +222,9 @@ def corpus_caps(spark: SparkSession, store: SnapStore,
     caps = {"has_redirects": False, "has_retryable": False,
             "has_sitemaps": False}
     if cfg.redirect_enabled and cfg.redirect_max_times > 0:
-        # probe the same source the round leg will read (the slim one-time
-        # index when present, else the pruned legacy scan)
+        # probe the same slim one-time index the round leg will read
         caps["has_redirects"] = bool(
-            redirect_index(spark, store, idx).limit(1).count()
+            store.read(spark, "redirects_idx").limit(1).count()
         )
     if cfg.retry_enabled and cfg.retry_times > 0:
         caps["has_retryable"] = bool(
@@ -272,9 +251,7 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     Returns summary counters (driver uses ``queued_end`` for termination)."""
     prev_manifest = store.round_manifest(round_n - 1)
     snaps = prev_manifest["tables"]  # crash-safe pins
-    seen_total = int(prev_manifest.get("meta", {}).get("seen_total", -1))
-    if seen_total < 0:  # legacy store without the counter: be conservative
-        seen_total = cfg.bloom_min_seen
+    seen_total = int(prev_manifest["meta"]["seen_total"])
     frontier = store.read(spark, "frontier", snaps["frontier"])
     robots_prev = store.read(spark, "robots", snaps["robots"])
     pages_idx = store.read(spark, "pages_idx")  # immutable post-init
@@ -501,7 +478,7 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     seen_keys = store.read(spark, "seen", snaps["seen"]).select(
         "bucket", "url_hash", "canon"
     )
-    use_bloom = cfg.dedup_bloom and seen_total >= cfg.bloom_min_seen
+    use_bloom = seen_total >= cfg.bloom_min_seen
     sidecar_prev: DataFrame | None = None
     # Redirect + retry outcome predicates (RedirectMiddleware/RetryMiddleware
     # semantics pinned in CrawlConfig; oracle/crawler.py mirrors the same
@@ -538,11 +515,10 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     # leg into computing the extraction twice per partition (measured: +33%
     # on the peak cluster round). Scanning pages_idx here instead would be a
     # per-round full-corpus metadata+column scan at design scale — 3xx rows
-    # are hash-scattered, so row-group stats prune nothing. Legacy stores
-    # without the table fall back to the pruned pages_idx scan.
+    # are hash-scattered, so row-group stats prune nothing.
     if cfg.redirect_enabled and caps["has_redirects"]:
         redir_src = (
-            redirect_index(spark, store, pages_idx)
+            store.read(spark, "redirects_idx")
             .join(_keys_side(keys), ["bucket", "url_hash", "canon"], "inner")
             .filter(redirect_follow)
         )

@@ -1,6 +1,7 @@
 """Arrow-batched pandas UDF wrappers over the pinned kernels.
 
-These four UDF families are the ONLY Python that touches row data in the
+These five UDFs (URL canonicalization, host, redirect resolution, page
+extraction, robots verdict) are the ONLY Python that touches row data in the
 pipeline (SURVEY.md §2.11); everything else is native DataFrame ops. The
 batch loop inside a pandas UDF is the sanctioned pattern when no vectorized
 kernel exists (BASELINE.json:15 "no per-row Python" = no per-row Spark UDF
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkcrawl.canon import canonicalize_url, resolve_redirect, url_host
-from sparkcrawl.extract import extract_links, extract_page, extract_text
+from sparkcrawl.extract import extract_page
 # The worker-side fast path (sparkcrawl/workerperf.py) installs from the
 # package __init__ — UDFs are pickled by value, so this module may never be
 # imported inside a worker; sparkcrawl.canon/extract (and hence the package
@@ -62,31 +63,10 @@ def resolve_redirect_udf(base_url: pd.Series, location: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_text(b) if b is not None else None)
-
-
-@F.pandas_udf(LINKS_TYPE)
-def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    out = []
-    for b, base in zip(html, base_url):
-        if b is None or base is None:
-            out.append([])
-        else:
-            out.append(
-                [
-                    {"url": l.url, "text": l.text, "nofollow": l.nofollow}
-                    for l in extract_links(b, base)
-                ]
-            )
-    return pd.Series(out)
-
-
 @F.pandas_udf(PAGE_TYPE)
 def extract_page_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
     """Hot-path extraction: ONE decode+parse per page yielding (text, links)
-    — halves Python CPU vs running the text and link UDFs separately. The
+    — halves Python CPU vs separate text and link passes. The
     pipeline persists the struct column so the UDF evaluates exactly once
     per page regardless of how many downstream projections read its fields."""
     texts, links = [], []

@@ -54,7 +54,7 @@ def test_redirect_leg_scans_slim_index_not_corpus(spark, tmp_path_factory):
     leg's plan — on a 10^10-page corpus the 3xx rows are hash-scattered, so
     a pages_idx scan per round prunes nothing and reads the whole corpus's
     metadata+columns thousands of times."""
-    from sparkcrawl.rounds import prepare_pages, redirect_index
+    from sparkcrawl.rounds import prepare_pages
     from sparkcrawl.snapstore import SnapStore
     from sparkcrawl.synth import generate
 
@@ -62,12 +62,11 @@ def test_redirect_leg_scans_slim_index_not_corpus(spark, tmp_path_factory):
     generate(corpus, seed=7, n_hosts=3, pages_per_host=30, n_seeds=3)
     store = SnapStore(str(tmp_path_factory.mktemp("redirstore")))
     prepare_pages(spark, store, corpus + "/pages.parquet")
-    idx = store.read(spark, "pages_idx")
     keys = spark.createDataFrame(
         [(0, 1, "http://h0.example/")],
         "bucket int, url_hash long, canon string",
     )
-    leg = redirect_index(spark, store, idx).join(
+    leg = store.read(spark, "redirects_idx").join(
         F.broadcast(keys), ["bucket", "url_hash", "canon"], "inner"
     )
     plan = _plan(leg)

@@ -76,54 +76,43 @@ def test_every_query_has_callable_and_most_have_oracles():
 
 
 def _green_history() -> dict[str, list[int]]:
-    """Per-entry rounds with a fully-green driver row, from the recorded
-    CORRECTNESS_r0N.json artifacts."""
+    """Per-entry rounds with a fully-green driver row, from every recorded
+    CORRECTNESS_r<N>.json artifact on disk."""
     import json
+    import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist: dict[str, list[int]] = {}
-    for r in (1, 2, 3, 4):
-        p = os.path.join(root, f"CORRECTNESS_r0{r}.json")
-        if not os.path.exists(p):
+    for fname in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if not m:
             continue
-        with open(p) as f:
+        with open(os.path.join(root, fname)) as f:
             for k, v in json.load(f).items():
                 ok = (v.get("rows_match") and v.get("schema_match")
                       and (v.get("hash_match") or v.get("err") == "no_oracle"))
                 if ok:
-                    hist.setdefault(k, []).append(r)
+                    hist.setdefault(k, []).append(int(m.group(1)))
     return hist
 
 
 def test_driver_window_rotation_policy():
     """The driver's CORRECTNESS gate checks only list(queries())[:50]
-    (VERDICT r3 #1). Rotation policy (VERDICT r4 #4): each round ~10 of the
-    stalest deferred entries swap back into the window in place of
-    multiply-green residents, so no battery entry's last driver-green row
-    ages past ~3 rounds. Pinned against the recorded CORRECTNESS artifacts,
-    not against a hand-maintained name list."""
-    from sparkcrawl.queries import _ROTATE_IN_R5, _ROTATE_OUT_R5
-
+    (VERDICT r3 #1), so queries() must put the entries with the stalest
+    driver signal first. Pinned against the recorded CORRECTNESS artifacts,
+    not against a hand-maintained name list: never-green entries lead, the
+    last green round never decreases along the order, and everything past
+    the window was green in the newest recorded round."""
     hist = _green_history()
     order = list(Q)
-    window, overflow = set(order[:50]), order[50:]
-    # rotated-in entries sit inside the checked window
-    assert set(_ROTATE_IN_R5) <= window, sorted(set(_ROTATE_IN_R5) - window)
-    # only multiply-green residents (≥3 recorded green rounds) may rotate out
-    thin = [n for n in _ROTATE_OUT_R5 if len(hist.get(n, [])) < 3]
-    assert not thin, thin
-    # entries whose implementation changed in round 5 must be in-window so
-    # the change gets a hard driver signal this round
-    changed_r5 = {"approx_users", "asof_join", "mixture_weights",
-                  "recrawl_priority", "ann_pq", "media_ann",
-                  "ann_ivf_multiprobe", "kmeans_embed"}
-    assert changed_r5 <= window, sorted(changed_r5 - window)
-    # staleness bound: every overflow entry has a driver-green row within
-    # the last two recorded rounds — nothing enters round 5 more than two
-    # rounds stale
-    stale = [n for n in overflow
-             if not any(r >= 3 for r in hist.get(n, []))]
-    assert not stale, stale
+    green = [n in hist for n in order]
+    assert green == sorted(green), "never-green entries must come first"
+    last = [max(hist[n]) for n in order if n in hist]
+    assert last == sorted(last), list(zip(order, last))
+    if hist:
+        newest = max(r for rs in hist.values() for r in rs)
+        stale = [n for n in order[50:] if newest not in hist.get(n, [])]
+        assert not stale, stale
 
 
 @pytest.mark.parametrize("name", sorted(Q))
@@ -160,15 +149,16 @@ def test_text_queries_survive_short_documents(spark, duck, name):
     sdf = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     sdf.createOrReplaceTempView("documents")
     try:
-        from sparkcrawl.queries import _SHARED_QUERIES
-        sql_spark = _SHARED_QUERIES[name]("spark")
+        from sparkcrawl.queries import REGISTRY
+        build = REGISTRY[name].sql
+        sql_spark = build("spark")
         srows = spark.sql(sql_spark).collect()
         scols = spark.sql(sql_spark).columns
         con = duckdb.connect()
         con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR,"
                     " lang VARCHAR)")
         con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
-        res = con.execute(_SHARED_QUERIES[name]("duck"))
+        res = con.execute(build("duckdb"))
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()
         assert _rowset(scols, [tuple(r) for r in srows]) == \
@@ -208,7 +198,7 @@ def test_asof_join_no_fanout_on_tied_purchase_timestamps(spark):
     collision case the natural fixtures never exercise: exactly one output
     row per view, matched to the HIGHEST event_id among tied purchases, and
     Spark ≡ DuckDB on the colliding input."""
-    from sparkcrawl.queries import _SHARED_QUERIES
+    from sparkcrawl.queries import _q_asof_join
 
     t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
@@ -228,7 +218,7 @@ def test_asof_join_no_fanout_on_tied_purchase_timestamps(spark):
     sdf.createOrReplaceTempView("events")
     try:
         srows = sorted(tuple(r) for r in
-                       spark.sql(_SHARED_QUERIES["asof_join"]("spark"))
+                       spark.sql(_q_asof_join("spark"))
                        .collect())
         con = duckdb.connect()
         con.execute("CREATE TABLE events(event_id BIGINT, user_id BIGINT,"
@@ -236,7 +226,7 @@ def test_asof_join_no_fanout_on_tied_purchase_timestamps(spark):
                     " payload VARCHAR)")
         con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)", rows)
         drows = sorted(tuple(r) for r in
-                       con.execute(_SHARED_QUERIES["asof_join"]("duckdb"))
+                       con.execute(_q_asof_join("duckdb"))
                        .fetchall())
         assert srows == drows
         by_view = {r[0]: r for r in srows}
@@ -424,10 +414,14 @@ def test_gopher_rules_signals_are_live(spark):
 
 def test_queries_md_index_is_current():
     """QUERIES.md (generated by tools/gen_query_index.py) must list exactly
-    the queries() entries in order — regenerate it when the battery
-    changes. Names/order only: description edits don't require a regen."""
+    the registry entries in registry order — regenerate it when the battery
+    changes. Names/order only: description edits and new CORRECTNESS
+    records (which move the driver window) don't require a regen."""
+    from sparkcrawl.queries import REGISTRY
+
     rows = [l.split("|")[2].strip().strip("`")
             for l in open(os.path.join(os.path.dirname(os.path.dirname(
                 os.path.abspath(__file__))), "QUERIES.md"))
             if l.startswith("|") and "---" not in l][1:]
-    assert rows == list(Q), "run: python tools/gen_query_index.py > QUERIES.md"
+    assert rows == list(REGISTRY), \
+        "run: python tools/gen_query_index.py > QUERIES.md"
