@@ -26,12 +26,20 @@ Scale notes (the 10^10-URL design point):
   host cannot pin a single task (P5)
 - ``html`` is projected away immediately after the extraction UDFs (F6);
   no stage after extraction ever sees the binary column
-- job-count discipline: ~5 sequential job slots per round — labeled
-  DataFrames give every per-partition metric family from ONE groupBy
-  (per-partition lineage per BASELINE.json:6 without per-counter jobs),
-  scalar counters ride ``Observation`` metrics on writes that must happen
-  anyway, and the four table writes at round end run concurrently from
-  driver threads (independent tables, independent cached inputs)
+- job-count discipline: three sequential count jobs per fetch round
+  (verdicts, candidates, dedup statuses) — labeled DataFrames give every
+  per-partition metric family from ONE groupBy (per-partition lineage per
+  BASELINE.json:6 without per-counter jobs), scalar counters ride
+  ``Observation`` metrics on writes that must happen anyway, and the four
+  to seven table writes at round end run concurrently from driver threads
+  (independent tables, independent cached inputs). Snapshot reads pin the
+  manifest schema, so no read launches a job and the count stays flat as
+  append chains grow. Measured with ``sc.statusTracker()`` on local[4]:
+  16 jobs per fetch round on perfbench's crawl_bulk corpus, 18 with the
+  redirect, retry and bloom legs on, the same in every round
+- an idle round (nothing passes robots and budget, no sitemap leg) runs
+  only the verdict count and the frontier, robots and frontier_log
+  writes, and re-commits the other tables' snapshots: 8 jobs
 - crash-safe resume: every read and every append-parent is pinned to the
   snapshot ids in the PREVIOUS round's committed manifest — snapshots
   written by a crashed round attempt are orphaned, never inherited
@@ -43,10 +51,12 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as _T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from sparkcrawl.config import CrawlConfig
 from sparkcrawl.cuckoo import MAGIC as _CUCKOO_MAGIC
@@ -67,7 +77,7 @@ from sparkcrawl.seenfilter import (
     probe_partitioned,
 )
 from sparkcrawl.snapstore import SnapStore
-from sparkcrawl.udfs import extract_page_udf, robots_allowed_udf
+from sparkcrawl.udfs import LINKS_TYPE, extract_page_udf, robots_allowed_udf
 
 METRICS_SCHEMA = _T.StructType(
     [
@@ -75,6 +85,21 @@ METRICS_SCHEMA = _T.StructType(
         _T.StructField("key", _T.StringType()),
         _T.StructField("partition_id", _T.IntegerType()),
         _T.StructField("n", _T.LongType()),
+    ]
+)
+
+# what a fetching round appends to ``extracted``; an idle round 0 commits an
+# empty snapshot of it without a Spark job
+EXTRACTED_SCHEMA = _T.StructType(
+    [
+        _T.StructField("round", _T.IntegerType()),
+        _T.StructField("url", _T.StringType()),
+        _T.StructField("canon", _T.StringType()),
+        _T.StructField("url_hash", _T.LongType()),
+        _T.StructField("text", _T.StringType()),
+        _T.StructField("n_links", _T.IntegerType()),
+        _T.StructField("links", LINKS_TYPE),
+        _T.StructField("meta", _T.StringType()),
     ]
 )
 
@@ -348,188 +373,14 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     n_pass = sum(n for k, _, n in counts if k == "pass")
     _tick("work_materialize")
 
-    # --- stage 5: global priority order + round cap ---
-    # When every pass row fits the global cap (the common case), the scheduled
-    # set IS the pass set — skip the global sort entirely. The per-round order
-    # is recovered on read (schedule_view sorts by priority/seq), so only the
-    # SET must match the oracle here. Otherwise take the top-K and repartition
-    # immediately: orderBy+limit yields a single partition (TakeOrdered) which
-    # must never be allowed to define downstream parallelism.
-    passed = work.filter(F.col("verdict") == "pass")
-    if n_pass <= cfg.round_size:
-        scheduled = passed.select(*FRONTIER_COLS)
-        deferred_cap = passed.select(*FRONTIER_COLS).limit(0)
-    elif cfg.round_size >= cfg.topk_histogram_min:
-        # threshold-cutoff top-K (VERDICT r2 #9): priorities are a small
-        # discrete set (seed priorities shifted by depth/retry/redirect
-        # adjusts), so a groupBy(priority) histogram is tiny. All rows
-        # strictly above the boundary priority pass outright; the boundary
-        # priority is topped up by smallest seq. The only single-partition
-        # exchange is the boundary top-up (≪ K rows), never the full K-row
-        # result — at round_size ~10^7 the sort path's GlobalLimit would
-        # funnel every scheduled row through one task.
-        hist = sorted(
-            (
-                (r["priority"], r["n"])
-                for r in passed.groupBy("priority")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            ),
-            reverse=True,
-        )
-        acc = 0
-        p_star, k_rem = hist[-1][0], cfg.round_size  # fallback: all in boundary
-        for prio, n in hist:
-            if acc + n >= cfg.round_size:
-                p_star, k_rem = prio, cfg.round_size - acc
-                break
-            acc += n
-        above = passed.filter(F.col("priority") > p_star).select(*FRONTIER_COLS)
-        boundary = passed.filter(F.col("priority") == p_star).select(*FRONTIER_COLS)
-        b_top = boundary.orderBy(F.col("seq").asc()).limit(k_rem)
-        scheduled = (
-            above.unionByName(b_top).repartition(par, "url_hash").persist()
-        )
-        b_keys = b_top.select("canon")
-        if k_rem <= cfg.dedup_broadcast_max:
-            b_keys = F.broadcast(b_keys)
-        deferred_cap = (
-            passed.filter(F.col("priority") < p_star)
-            .select(*FRONTIER_COLS)
-            .unionByName(boundary.join(b_keys, "canon", "left_anti"))
-        )
-    else:
-        # global top-K: Sort + LocalLimit-per-partition + single-partition
-        # GlobalLimit (shuffle volume ≤ round_size × partitions of slim
-        # rows); repartition immediately so the single partition never
-        # defines downstream parallelism. Cheapest shape while round_size
-        # is operator-bounded small; the histogram path above takes over at
-        # topk_histogram_min.
-        scheduled = (
-            passed.select(*FRONTIER_COLS)
-            .orderBy(F.col("priority").desc(), F.col("seq").asc())
-            .limit(cfg.round_size)
-            .repartition(par, "url_hash")
-            .persist()
-        )
-        sched_keys = scheduled.select("canon")
-        if cfg.round_size <= cfg.dedup_broadcast_max:
-            sched_keys = F.broadcast(sched_keys)
-        deferred_cap = passed.select(*FRONTIER_COLS).join(
-            sched_keys, "canon", "left_anti"
-        )
-    n_sched = min(n_pass, cfg.round_size)
-
-    # --- stages 6-7: fetch = corpus ⨝ broadcast(batch); extraction UDFs ---
-    keys = with_bucket(scheduled, n_buckets=cfg.n_buckets)
-    # extraction runs in the scan stage itself: hits are hash-uniform across
-    # the bucket-partitioned corpus files, so the Python stage inherits even
-    # scan parallelism with ZERO movement of html bytes (no shuffle, no
-    # broadcast of the fat side). One combined UDF decodes+parses each page
-    # once, and the struct lands in the persisted cache so it can never be
-    # re-evaluated by downstream projections.
-    # F5 HTTP-status filter: non-2xx hits are fetched (politeness/latency
-    # accounting still applies) but never extracted — their html is nulled
-    # BEFORE the UDF so the python stage pays nothing for them and their
-    # link list is empty by construction (HttpErrorMiddleware semantics).
-    # Broadcast guard (VERDICT r3 #4b, mirrors dedup_broadcast_max): the
-    # batch size is driver-known (n_sched), so past fetch_broadcast_max the
-    # round uses the shuffle join instead of an unbounded multi-GB broadcast
-    # — see CrawlConfig.fetch_broadcast_max for the design-scale plan.
-    fetch_bcast = n_sched <= cfg.fetch_broadcast_max
-
-    def _keys_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if fetch_bcast else df
-
-    fetched = (
-        pages_idx.select(
-            "bucket", "url_hash", "canon", "page_url", "html", "latency_ms",
-            "status", "location",
-        )
-        .join(_keys_side(keys), ["bucket", "url_hash", "canon"], "inner")
-        .withColumn(
-            "html", F.when(F.col("status") == 200, F.col("html"))
-        )
-        .withColumn("page", extract_page_udf("html", "page_url"))
-        .drop("html")
-        .persist()
-    )
-    if _prof and os.environ.get("SPARKCRAWL_PROFILE2") == "1":
-        fetched.count()
-        _tick("fetch_extract_only")
-    missed = keys.join(
-        _keys_side(fetched.select("bucket", "url_hash", "canon")),
-        ["bucket", "url_hash", "canon"],
-        "left_anti",
-    ).select(*FRONTIER_COLS)
-
-    # --- stages 7b-8: link discovery, filters, batch dedup, bloom + exact ---
-    # No window over the exploded links: dropped rows and in-batch duplicates
-    # never consult the seen set (their status is decided locally), so the
-    # per-canon winner comes from a map-side-combining
-    # groupBy(canon).min_by aggregation instead of a row_number window. The
-    # round-1 window shape shuffled AND globally sorted every exploded link
-    # row with zero map-side reduction; the groupBy ships one
-    # partially-aggregated row per (map partition, canon), shrinking the
-    # peak-frontier round's dominant shuffle by the in-batch duplication
-    # factor — this was the measured scaling bottleneck (VERDICT r1).
-    # (Struct min_by buffers are var-length, so Spark plans SortAggregate —
-    # per-partition sorts, but the shuffle-volume win is what matters.)
-    seen_keys = store.read(spark, "seen", snaps["seen"]).select(
-        "bucket", "url_hash", "canon"
-    )
-    use_bloom = seen_total >= cfg.bloom_min_seen
-    sidecar_prev: DataFrame | None = None
-    # Redirect + retry outcome predicates (RedirectMiddleware/RetryMiddleware
-    # semantics pinned in CrawlConfig; oracle/crawler.py mirrors the same
-    # precedence: 200 → redirect-followable 3xx → retryable → terminal).
-    # corpus_caps (computed once per crawl) folds the predicates to FALSE —
-    # and the plan branches away entirely below — when the corpus cannot
-    # produce the outcome: on an all-2xx corpus the branches are pure
-    # overhead (a second scan leg + a frontier union per round).
+    # corpus_caps (computed once per crawl) folds the redirect, retry and
+    # sitemap predicates to FALSE — and the plan branches away entirely
+    # below — when the corpus cannot produce the outcome: on an all-2xx
+    # corpus the branches are pure overhead (a second scan leg + a frontier
+    # union per round).
     caps = corpus_caps or {
         "has_redirects": True, "has_retryable": True, "has_sitemaps": True
     }
-    is_3xx = (F.col("status") >= 300) & (F.col("status") < 400)
-    redirect_follow = (
-        F.lit(cfg.redirect_enabled and caps["has_redirects"])
-        & is_3xx
-        & F.col("location").isNotNull()
-        & (F.col("redirects") < F.lit(cfg.redirect_max_times))
-    )
-    retryable = (
-        F.lit(cfg.retry_enabled and caps["has_retryable"])
-        & F.col("status").isin(list(cfg.retry_http_codes))
-        & (F.col("retries") < F.lit(cfg.retry_times))
-    )
-    # candidate pool = discovered links ∪ followed redirect targets; the src
-    # tag keeps the links_extracted counter link-only while the drop-reason
-    # and dedup accounting covers both (one combined counts job)
-    link_cand = links_to_candidates(
-        fetched.withColumn("links", F.col("page.links")), cfg, round_n
-    ).select(*FRONTIER_COLS, "drop_reason").withColumn("src", F.lit("link"))
-    # The redirect leg reads the one-time slim `redirects_idx` table (only
-    # followable-3xx rows, no html — VERDICT r3 #4) instead of consuming the
-    # `fetched` cache: both union legs land in the same counts job, and a
-    # second consumer of the NOT-YET-materialized cache would race the link
-    # leg into computing the extraction twice per partition (measured: +33%
-    # on the peak cluster round). Scanning pages_idx here instead would be a
-    # per-round full-corpus metadata+column scan at design scale — 3xx rows
-    # are hash-scattered, so row-group stats prune nothing.
-    if cfg.redirect_enabled and caps["has_redirects"]:
-        redir_src = (
-            store.read(spark, "redirects_idx")
-            .join(_keys_side(keys), ["bucket", "url_hash", "canon"], "inner")
-            .filter(redirect_follow)
-        )
-        redir_cand = (
-            redirects_to_candidates(redir_src, cfg, round_n)
-            .select(*FRONTIER_COLS, "drop_reason")
-            .withColumn("src", F.lit("redirect"))
-        )
-        cand0_all = link_cand.unionByName(redir_cand)
-    else:
-        cand0_all = link_cand
     # Sitemap discovery (SitemapSpider robots.txt handling, pinned in
     # CrawlConfig): `Sitemap:` directives of robots bodies fetched THIS
     # round become candidates alongside the round's links — they ride the
@@ -544,191 +395,362 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
         and caps.get("has_sitemaps", True)
         and new_robots is not None
     )
-    if sitemap_leg:
-        sm_cand = (
-            sitemaps_to_candidates(new_robots, cfg, round_n)
-            .select(*FRONTIER_COLS, "drop_reason")
-            .withColumn("src", F.lit("sitemap"))
+    use_bloom = seen_total >= cfg.bloom_min_seen
+    # tables that only fetched pages and discovered URLs change
+    fetch_tables = ["extracted", "seen"]
+    if cfg.adaptive_budget:
+        fetch_tables.append("host_lat")
+    if use_bloom:
+        fetch_tables.append("seen_filter")
+    # every round re-queues its robots- and budget-deferred rows and logs
+    # its robots-denied rows; a fetching round adds its own rows to both
+    frontier_parts = [
+        work.filter(F.col("verdict").isin("robots_deferred", "budget_deferred"))
+        .select(*FRONTIER_COLS)
+    ]
+    log_parts = [
+        work.filter(F.col("verdict") == "robots_denied")
+        .select(*FRONTIER_COLS)
+        .withColumn("state", F.lit("ROBOTS_DENIED"))
+    ]
+    to_unpersist = [work, new_robots]
+
+    # Idle round: nothing passed robots and budget, and no sitemap leg can
+    # discover URLs — round 0 of every obey_robots crawl, whose seeds all
+    # wait on their hosts' robots.txt. Nothing is fetched, extracted,
+    # deduped or enqueued, so the round skips those legs and their jobs and
+    # re-commits the fetch-side tables' previous snapshots; every counter
+    # keeps the value the full path would compute (the fetch and link
+    # counters are 0).
+    idle = n_pass == 0 and not sitemap_leg
+    if idle:
+        n_sched = 0
+        counts.append(("links_extracted", -1, 0))
+        counts.append(("dup_in_batch", -1, 0))
+        snap_ids = {t: snaps[t] for t in fetch_tables if t in snaps}
+        if "extracted" not in snap_ids:
+            # readers expect every table once round 0 commits
+            snap_ids["extracted"] = store.append_local(
+                "extracted", to_arrow_schema(EXTRACTED_SCHEMA).empty_table(),
+                EXTRACTED_SCHEMA, parent=None,
+            )
+        writes = {}
+    else:
+        # --- stage 5: global priority order + round cap ---
+        # When every pass row fits the global cap (the common case), the scheduled
+        # set IS the pass set — skip the global sort entirely. The per-round order
+        # is recovered on read (schedule_view sorts by priority/seq), so only the
+        # SET must match the oracle here. Otherwise take the top-K and repartition
+        # immediately: orderBy+limit yields a single partition (TakeOrdered) which
+        # must never be allowed to define downstream parallelism.
+        passed = work.filter(F.col("verdict") == "pass")
+        if n_pass <= cfg.round_size:
+            scheduled = passed.select(*FRONTIER_COLS)
+            deferred_cap = passed.select(*FRONTIER_COLS).limit(0)
+        elif cfg.round_size >= cfg.topk_histogram_min:
+            # threshold-cutoff top-K (VERDICT r2 #9): priorities are a small
+            # discrete set (seed priorities shifted by depth/retry/redirect
+            # adjusts), so a groupBy(priority) histogram is tiny. All rows
+            # strictly above the boundary priority pass outright; the boundary
+            # priority is topped up by smallest seq. The only single-partition
+            # exchange is the boundary top-up (≪ K rows), never the full K-row
+            # result — at round_size ~10^7 the sort path's GlobalLimit would
+            # funnel every scheduled row through one task.
+            hist = sorted(
+                (
+                    (r["priority"], r["n"])
+                    for r in passed.groupBy("priority")
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .collect()
+                ),
+                reverse=True,
+            )
+            acc = 0
+            p_star, k_rem = hist[-1][0], cfg.round_size  # fallback: all in boundary
+            for prio, n in hist:
+                if acc + n >= cfg.round_size:
+                    p_star, k_rem = prio, cfg.round_size - acc
+                    break
+                acc += n
+            above = passed.filter(F.col("priority") > p_star).select(*FRONTIER_COLS)
+            boundary = passed.filter(F.col("priority") == p_star).select(*FRONTIER_COLS)
+            b_top = boundary.orderBy(F.col("seq").asc()).limit(k_rem)
+            scheduled = (
+                above.unionByName(b_top).repartition(par, "url_hash").persist()
+            )
+            b_keys = b_top.select("canon")
+            if k_rem <= cfg.dedup_broadcast_max:
+                b_keys = F.broadcast(b_keys)
+            deferred_cap = (
+                passed.filter(F.col("priority") < p_star)
+                .select(*FRONTIER_COLS)
+                .unionByName(boundary.join(b_keys, "canon", "left_anti"))
+            )
+        else:
+            # global top-K: Sort + LocalLimit-per-partition + single-partition
+            # GlobalLimit (shuffle volume ≤ round_size × partitions of slim
+            # rows); repartition immediately so the single partition never
+            # defines downstream parallelism. Cheapest shape while round_size
+            # is operator-bounded small; the histogram path above takes over at
+            # topk_histogram_min.
+            scheduled = (
+                passed.select(*FRONTIER_COLS)
+                .orderBy(F.col("priority").desc(), F.col("seq").asc())
+                .limit(cfg.round_size)
+                .repartition(par, "url_hash")
+                .persist()
+            )
+            sched_keys = scheduled.select("canon")
+            if cfg.round_size <= cfg.dedup_broadcast_max:
+                sched_keys = F.broadcast(sched_keys)
+            deferred_cap = passed.select(*FRONTIER_COLS).join(
+                sched_keys, "canon", "left_anti"
+            )
+        n_sched = min(n_pass, cfg.round_size)
+
+        # --- stages 6-7: fetch = corpus ⨝ broadcast(batch); extraction UDFs ---
+        keys = with_bucket(scheduled, n_buckets=cfg.n_buckets)
+        # extraction runs in the scan stage itself: hits are hash-uniform across
+        # the bucket-partitioned corpus files, so the Python stage inherits even
+        # scan parallelism with ZERO movement of html bytes (no shuffle, no
+        # broadcast of the fat side). One combined UDF decodes+parses each page
+        # once, and the struct lands in the persisted cache so it can never be
+        # re-evaluated by downstream projections.
+        # F5 HTTP-status filter: non-2xx hits are fetched (politeness/latency
+        # accounting still applies) but never extracted — their html is nulled
+        # BEFORE the UDF so the python stage pays nothing for them and their
+        # link list is empty by construction (HttpErrorMiddleware semantics).
+        # Broadcast guard (VERDICT r3 #4b, mirrors dedup_broadcast_max): the
+        # batch size is driver-known (n_sched), so past fetch_broadcast_max the
+        # round uses the shuffle join instead of an unbounded multi-GB broadcast
+        # — see CrawlConfig.fetch_broadcast_max for the design-scale plan.
+        fetch_bcast = n_sched <= cfg.fetch_broadcast_max
+
+        def _keys_side(df: DataFrame) -> DataFrame:
+            return F.broadcast(df) if fetch_bcast else df
+
+        fetched = (
+            pages_idx.select(
+                "bucket", "url_hash", "canon", "page_url", "html", "latency_ms",
+                "status", "location",
+            )
+            .join(_keys_side(keys), ["bucket", "url_hash", "canon"], "inner")
+            .withColumn(
+                "html", F.when(F.col("status") == 200, F.col("html"))
+            )
+            .withColumn("page", extract_page_udf("html", "page_url"))
+            .drop("html")
+            .persist()
         )
-        cand0_all = cand0_all.unionByName(sm_cand)
-    cand0 = with_bucket(cand0_all, n_buckets=cfg.n_buckets).persist()
-    # one counts job over ALL candidate rows (materializes the cand0 cache):
-    # drop-reason + viable tallies per partition; dropped rows are never
-    # needed again — only counted
-    tagged_counts = _verdict_counts(
-        cand0.withColumn(
-            "k",
-            F.concat_ws(
-                "|",
-                F.col("src"),
-                F.when(
-                    F.col("drop_reason").isNotNull(),
-                    F.concat(F.lower(F.col("drop_reason")), F.lit("_dropped")),
-                ).otherwise(F.lit("viable")),
+        missed = keys.join(
+            _keys_side(fetched.select("bucket", "url_hash", "canon")),
+            ["bucket", "url_hash", "canon"],
+            "left_anti",
+        ).select(*FRONTIER_COLS)
+
+        # --- stages 7b-8: link discovery, filters, batch dedup, bloom + exact ---
+        # No window over the exploded links: dropped rows and in-batch duplicates
+        # never consult the seen set (their status is decided locally), so the
+        # per-canon winner comes from a map-side-combining
+        # groupBy(canon).min_by aggregation instead of a row_number window. The
+        # round-1 window shape shuffled AND globally sorted every exploded link
+        # row with zero map-side reduction; the groupBy ships one
+        # partially-aggregated row per (map partition, canon), shrinking the
+        # peak-frontier round's dominant shuffle by the in-batch duplication
+        # factor — this was the measured scaling bottleneck (VERDICT r1).
+        # (Struct min_by buffers are var-length, so Spark plans SortAggregate —
+        # per-partition sorts, but the shuffle-volume win is what matters.)
+        seen_keys = store.read(spark, "seen", snaps["seen"]).select(
+            "bucket", "url_hash", "canon"
+        )
+        sidecar_prev: DataFrame | None = None
+        # Redirect + retry outcome predicates (RedirectMiddleware/RetryMiddleware
+        # semantics pinned in CrawlConfig; oracle/crawler.py mirrors the same
+        # precedence: 200 → redirect-followable 3xx → retryable → terminal).
+        is_3xx = (F.col("status") >= 300) & (F.col("status") < 400)
+        redirect_follow = (
+            F.lit(cfg.redirect_enabled and caps["has_redirects"])
+            & is_3xx
+            & F.col("location").isNotNull()
+            & (F.col("redirects") < F.lit(cfg.redirect_max_times))
+        )
+        retryable = (
+            F.lit(cfg.retry_enabled and caps["has_retryable"])
+            & F.col("status").isin(list(cfg.retry_http_codes))
+            & (F.col("retries") < F.lit(cfg.retry_times))
+        )
+        # candidate pool = discovered links ∪ followed redirect targets; the src
+        # tag keeps the links_extracted counter link-only while the drop-reason
+        # and dedup accounting covers both (one combined counts job)
+        link_cand = links_to_candidates(
+            fetched.withColumn("links", F.col("page.links")), cfg, round_n
+        ).select(*FRONTIER_COLS, "drop_reason").withColumn("src", F.lit("link"))
+        # The redirect leg reads the one-time slim `redirects_idx` table (only
+        # followable-3xx rows, no html — VERDICT r3 #4) instead of consuming the
+        # `fetched` cache: both union legs land in the same counts job, and a
+        # second consumer of the NOT-YET-materialized cache would race the link
+        # leg into computing the extraction twice per partition (measured: +33%
+        # on the peak cluster round). Scanning pages_idx here instead would be a
+        # per-round full-corpus metadata+column scan at design scale — 3xx rows
+        # are hash-scattered, so row-group stats prune nothing.
+        if cfg.redirect_enabled and caps["has_redirects"]:
+            redir_src = (
+                store.read(spark, "redirects_idx")
+                .join(_keys_side(keys), ["bucket", "url_hash", "canon"], "inner")
+                .filter(redirect_follow)
+            )
+            redir_cand = (
+                redirects_to_candidates(redir_src, cfg, round_n)
+                .select(*FRONTIER_COLS, "drop_reason")
+                .withColumn("src", F.lit("redirect"))
+            )
+            cand0_all = link_cand.unionByName(redir_cand)
+        else:
+            cand0_all = link_cand
+        if sitemap_leg:
+            sm_cand = (
+                sitemaps_to_candidates(new_robots, cfg, round_n)
+                .select(*FRONTIER_COLS, "drop_reason")
+                .withColumn("src", F.lit("sitemap"))
+            )
+            cand0_all = cand0_all.unionByName(sm_cand)
+        cand0 = with_bucket(cand0_all, n_buckets=cfg.n_buckets).persist()
+        # one counts job over ALL candidate rows (materializes the cand0 cache):
+        # drop-reason + viable tallies per partition; dropped rows are never
+        # needed again — only counted
+        tagged_counts = _verdict_counts(
+            cand0.withColumn(
+                "k",
+                F.concat_ws(
+                    "|",
+                    F.col("src"),
+                    F.when(
+                        F.col("drop_reason").isNotNull(),
+                        F.concat(F.lower(F.col("drop_reason")), F.lit("_dropped")),
+                    ).otherwise(F.lit("viable")),
+                ),
             ),
-        ),
-        "k",
-    )
-    n_viable = 0
-    n_links_extracted = 0
-    n_sitemap_urls = 0
-    for k, p, n in tagged_counts:
-        src, _, st = k.partition("|")
-        if src == "link":
-            n_links_extracted += n
-        if src == "sitemap":
-            n_sitemap_urls += n
-        if st == "viable":
-            n_viable += n
-        else:
-            counts.append((st, p, n))
-    counts.append(("links_extracted", -1, n_links_extracted))
-    if sitemap_leg:
-        counts.append(("sitemap_urls", -1, n_sitemap_urls))
-    _tick("cand_counts")
-
-    # Only rank-1 viable rows ever consult the seen set: this shrinks the
-    # dedup join's probe side from all exploded links (batch dup rate on
-    # real crawls is huge) to the batch's distinct viable canons — and makes
-    # its inputs small enough that the join strategy is stable instead of
-    # flapping between broadcast and SMJ on AQE stats.
-    rank1 = (
-        cand0.filter(F.col("drop_reason").isNull())
-        .groupBy("canon")
-        .agg(
-            F.min_by(
-                F.struct(*[c for c in FRONTIER_COLS if c != "canon"], "bucket"),
-                F.col("seq"),
-            ).alias("_w")
+            "k",
         )
-        .select("canon", "_w.*")
-    )
+        n_viable = 0
+        n_links_extracted = 0
+        n_sitemap_urls = 0
+        for k, p, n in tagged_counts:
+            src, _, st = k.partition("|")
+            if src == "link":
+                n_links_extracted += n
+            if src == "sitemap":
+                n_sitemap_urls += n
+            if st == "viable":
+                n_viable += n
+            else:
+                counts.append((st, p, n))
+        counts.append(("links_extracted", -1, n_links_extracted))
+        if sitemap_leg:
+            counts.append(("sitemap_urls", -1, n_sitemap_urls))
+        _tick("cand_counts")
 
-    have_sidecar = "seen_filter" in snaps
-    if use_bloom and have_sidecar:
-        # bucket-partitioned probe (VERDICT r2 #1): the sidecar is a normal
-        # Spark table; candidates cogroup with it on bucket so each task
-        # loads ONLY its bucket's blob — no driver collect, no whole-sidecar
-        # broadcast (~12.5 GB at the 10^10 design point). The cogroup
-        # exchange ships slim rank-1 candidate rows + one blob per bucket.
-        sidecar_prev = store.read(spark, "seen_filter", snaps["seen_filter"])
-        probe_schema = _T.StructType(
-            rank1.schema.fields + [_T.StructField("_maybe", _T.BooleanType())]
-        )
-        # exact check ONLY for bloom-positive rows. rank1 is persisted so
-        # its consumers share one materialization of the aggregation.
-        rank1 = probe_partitioned(rank1, sidecar_prev, probe_schema).persist()
-        if n_viable <= cfg.dedup_broadcast_max:
-            # broadcast the maybe-keys to stream (never shuffle) the seen
-            # scan, broadcast the confirmed dups back
-            maybe_keys = rank1.filter(F.col("_maybe")).select(
-                "bucket", "url_hash", "canon"
+        # Only rank-1 viable rows ever consult the seen set: this shrinks the
+        # dedup join's probe side from all exploded links (batch dup rate on
+        # real crawls is huge) to the batch's distinct viable canons — and makes
+        # its inputs small enough that the join strategy is stable instead of
+        # flapping between broadcast and SMJ on AQE stats.
+        rank1 = (
+            cand0.filter(F.col("drop_reason").isNull())
+            .groupBy("canon")
+            .agg(
+                F.min_by(
+                    F.struct(*[c for c in FRONTIER_COLS if c != "canon"], "bucket"),
+                    F.col("seq"),
+                ).alias("_w")
             )
-            seen_hits = seen_keys.join(
-                F.broadcast(maybe_keys), ["bucket", "url_hash", "canon"], "left_semi"
-            ).withColumn("_seen", F.lit(True))
+            .select("canon", "_w.*")
+        )
+
+        have_sidecar = "seen_filter" in snaps
+        if use_bloom and have_sidecar:
+            # bucket-partitioned probe (VERDICT r2 #1): the sidecar is a normal
+            # Spark table; candidates cogroup with it on bucket so each task
+            # loads ONLY its bucket's blob — no driver collect, no whole-sidecar
+            # broadcast (~12.5 GB at the 10^10 design point). The cogroup
+            # exchange ships slim rank-1 candidate rows + one blob per bucket.
+            sidecar_prev = store.read(spark, "seen_filter", snaps["seen_filter"])
+            probe_schema = _T.StructType(
+                rank1.schema.fields + [_T.StructField("_maybe", _T.BooleanType())]
+            )
+            # exact check ONLY for bloom-positive rows. rank1 is persisted so
+            # its consumers share one materialization of the aggregation.
+            rank1 = probe_partitioned(rank1, sidecar_prev, probe_schema).persist()
+            to_unpersist.append(rank1)
+            if n_viable <= cfg.dedup_broadcast_max:
+                # broadcast the maybe-keys to stream (never shuffle) the seen
+                # scan, broadcast the confirmed dups back
+                maybe_keys = rank1.filter(F.col("_maybe")).select(
+                    "bucket", "url_hash", "canon"
+                )
+                seen_hits = seen_keys.join(
+                    F.broadcast(maybe_keys), ["bucket", "url_hash", "canon"], "left_semi"
+                ).withColumn("_seen", F.lit(True))
+                labeled1 = rank1.join(
+                    F.broadcast(seen_hits), ["bucket", "url_hash", "canon"], "left"
+                )
+            else:
+                # broadcast guard (r1 #7): maybe-keys size tracks the round's
+                # duplicate-candidate count, which is unbounded on real crawls —
+                # past the threshold, shuffle ONLY the maybe rows into the
+                # co-partitioned join against seen (both sides bucketed on
+                # url_hash); bloom-negative rows are definitely new and bypass
+                # the join entirely. Same verdicts, property-tested.
+                hit = rank1.filter(F.col("_maybe")).join(
+                    seen_keys.withColumn("_seen", F.lit(True)),
+                    ["bucket", "url_hash", "canon"],
+                    "left",
+                )
+                labeled1 = rank1.filter(~F.col("_maybe")).withColumn(
+                    "_seen", F.lit(None).cast("boolean")
+                ).unionByName(hit)
+        else:
             labeled1 = rank1.join(
-                F.broadcast(seen_hits), ["bucket", "url_hash", "canon"], "left"
-            )
-        else:
-            # broadcast guard (r1 #7): maybe-keys size tracks the round's
-            # duplicate-candidate count, which is unbounded on real crawls —
-            # past the threshold, shuffle ONLY the maybe rows into the
-            # co-partitioned join against seen (both sides bucketed on
-            # url_hash); bloom-negative rows are definitely new and bypass
-            # the join entirely. Same verdicts, property-tested.
-            hit = rank1.filter(F.col("_maybe")).join(
                 seen_keys.withColumn("_seen", F.lit(True)),
                 ["bucket", "url_hash", "canon"],
                 "left",
             )
-            labeled1 = rank1.filter(~F.col("_maybe")).withColumn(
-                "_seen", F.lit(None).cast("boolean")
-            ).unionByName(hit)
-    else:
-        labeled1 = rank1.join(
-            seen_keys.withColumn("_seen", F.lit(True)),
-            ["bucket", "url_hash", "canon"],
-            "left",
-        )
-    labeled1 = labeled1.withColumn(
-        "status",
-        F.when(F.col("_seen").isNotNull(), "dedup_dropped").otherwise("enqueued"),
-    ).persist()
-    link_counts = _verdict_counts(labeled1, "status")
-    counts.extend(link_counts)
-    # in-batch duplicates = viable rows minus canon-level winners; the
-    # duplicate rows themselves are never used, only counted
-    n_rank1 = sum(n for _, _, n in link_counts)
-    counts.append(("dup_in_batch", -1, n_viable - n_rank1))
-    _tick("linkwork")
-    fresh = labeled1.filter(F.col("status") == "enqueued")
+        labeled1 = labeled1.withColumn(
+            "status",
+            F.when(F.col("_seen").isNotNull(), "dedup_dropped").otherwise("enqueued"),
+        ).persist()
+        link_counts = _verdict_counts(labeled1, "status")
+        counts.extend(link_counts)
+        # in-batch duplicates = viable rows minus canon-level winners; the
+        # duplicate rows themselves are never used, only counted
+        n_rank1 = sum(n for _, _, n in link_counts)
+        counts.append(("dup_in_batch", -1, n_viable - n_rank1))
+        _tick("linkwork")
+        fresh = labeled1.filter(F.col("status") == "enqueued")
+        to_unpersist += [scheduled, fetched, cand0, labeled1]
 
-    # --- commits: the independent table writes run concurrently (driver
-    #     threads; every input is cached, every target table distinct) ---
-    ext_obs = Observation()
-
-    def _w_extracted():
-        return store.append(
-            "extracted",
-            fetched.filter(F.col("status") == 200).select(
-                F.lit(round_n).alias("round"), "url", "canon", "url_hash",
-                F.col("page.text").alias("text"),
-                F.size("page.links").alias("n_links"),
-                F.col("page.links").alias("links"),
-                "meta",  # Response.meta surface for item pipelines
-            )
-            .observe(ext_obs, F.count(F.lit(1)).alias("n"))
-            .coalesce(par),
-            parent=snaps.get("extracted"),
-        )
-
-    def _w_seen():
-        return store.append(
-            "seen",
-            fresh.select(
-                "bucket", "url_hash", "canon", _fp_col(),
-                F.lit(round_n).cast("int").alias("first_round"),
-            ).repartition(cfg.n_buckets, "bucket"),
-            partition_by=["bucket"],
-            parent=snaps["seen"],
-        )
-
-    def _w_frontier():
-        new_frontier = (
-            work.filter(F.col("verdict").isin("robots_deferred", "budget_deferred"))
-            .select(*FRONTIER_COLS)
-            .unionByName(deferred_cap)
-            .unionByName(fresh.select(*FRONTIER_COLS))
-        )
+        frontier_parts += [deferred_cap, fresh.select(*FRONTIER_COLS)]
         if cfg.retry_enabled and caps["has_retryable"]:
             # retryable rows return to QUEUED with retries+1 and adjusted
             # priority (RetryMiddleware); their fingerprints are already in
             # seen, so they bypass dedup by construction. fetched is cached
-            # and materialized by now, and the columnar cache prunes to the
-            # slim frontier columns — no page-struct bytes move.
-            retry_rows = fetched.filter(retryable).select(
-                *[c for c in FRONTIER_COLS if c not in ("priority", "retries")],
-                (F.col("priority") + F.lit(cfg.retry_priority_adjust))
-                .cast("int")
-                .alias("priority"),
-                (F.col("retries") + 1).cast("int").alias("retries"),
+            # and materialized by the time the writes run, and the columnar
+            # cache prunes to the slim frontier columns — no page-struct bytes
+            # move.
+            frontier_parts.append(
+                fetched.filter(retryable).select(
+                    *[c for c in FRONTIER_COLS if c not in ("priority", "retries")],
+                    (F.col("priority") + F.lit(cfg.retry_priority_adjust))
+                    .cast("int")
+                    .alias("priority"),
+                    (F.col("retries") + 1).cast("int").alias("retries"),
+                ).select(*FRONTIER_COLS)
             )
-            new_frontier = new_frontier.unionByName(
-                retry_rows.select(*FRONTIER_COLS)
-            )
-        return store.overwrite(
-            "frontier", new_frontier.repartition(par, "url_hash")
-        )
-
-    log_obs = Observation()
-
-    def _w_log():
         # per-attempt outcome states: FETCHED (2xx) / REDIRECT (followed 3xx,
         # terminal for the source row) / RETRY (re-queued, non-terminal) /
         # HTTP_<code> (terminal: non-retryable non-2xx, retry-exhausted 5xx,
         # redirect-cap-exhausted 3xx) / ERROR (corpus miss) / ROBOTS_DENIED
-        log = (
+        log_parts[:0] = [
             fetched.select(*FRONTIER_COLS, "status", "location")
             .withColumn(
                 "state",
@@ -737,13 +759,95 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
                 .when(retryable, F.lit("RETRY"))
                 .otherwise(F.concat(F.lit("HTTP_"), F.col("status"))),
             )
-            .drop("status", "location")
-            .unionByName(missed.withColumn("state", F.lit("ERROR")))
-            .unionByName(
-                work.filter(F.col("verdict") == "robots_denied")
-                .select(*FRONTIER_COLS)
-                .withColumn("state", F.lit("ROBOTS_DENIED"))
+            .drop("status", "location"),
+            missed.withColumn("state", F.lit("ERROR")),
+        ]
+
+        ext_obs = Observation()
+
+        def _w_extracted():
+            return store.append(
+                "extracted",
+                fetched.filter(F.col("status") == 200).select(
+                    F.lit(round_n).alias("round"), "url", "canon", "url_hash",
+                    F.col("page.text").alias("text"),
+                    F.size("page.links").alias("n_links"),
+                    F.col("page.links").alias("links"),
+                    "meta",  # Response.meta surface for item pipelines
+                )
+                .observe(ext_obs, F.count(F.lit(1)).alias("n"))
+                .coalesce(par),
+                parent=snaps.get("extracted"),
             )
+
+        def _w_seen():
+            return store.append(
+                "seen",
+                fresh.select(
+                    "bucket", "url_hash", "canon", _fp_col(),
+                    F.lit(round_n).cast("int").alias("first_round"),
+                ).repartition(cfg.n_buckets, "bucket"),
+                partition_by=["bucket"],
+                parent=snaps["seen"],
+            )
+
+        def _w_host_lat():
+            # P4/A3: integer latency EWMA per host (pinned formula, config.py).
+            # Hosts fetched this round fold their obs into the running EWMA;
+            # untouched hosts carry theirs forward unchanged.
+            obs = fetched.groupBy("host").agg(
+                F.expr("sum(latency_ms) DIV count(1)").alias("obs_ms")
+            )
+            if host_lat_prev is not None:
+                prev = host_lat_prev.select("host", F.col("ewma_ms").alias("prev_ms"))
+                merged = obs.join(prev, "host", "full_outer").select(
+                    "host",
+                    F.when(F.col("obs_ms").isNull(), F.col("prev_ms"))
+                    .when(F.col("prev_ms").isNull(), F.col("obs_ms"))
+                    .otherwise(F.expr("(obs_ms + prev_ms) DIV 2"))
+                    .alias("ewma_ms"),
+                )
+            else:
+                merged = obs.select("host", F.col("obs_ms").alias("ewma_ms"))
+            return store.overwrite("host_lat", merged.repartition(max(2, par // 8)))
+
+        def _w_filter():
+            # bloom sidecar update (VERDICT r2 #1): fresh keys cogroup with the
+            # previous sidecar on bucket and OR-merge INSIDE the grouped-map —
+            # per-bucket end to end, the driver only records the snapshot id
+            base = fresh.select("bucket", "url_hash")
+            old_sc = sidecar_prev
+            if not have_sidecar:
+                # first activation (seen just crossed bloom_min_seen, or store
+                # initialized with bloom off): backfill from the FULL seen set —
+                # a partial sidecar would produce false negatives, which the
+                # design forbids
+                base = base.unionByName(seen_keys.select("bucket", "url_hash"))
+                old_sc = empty_sidecar(spark)
+            merged = merge_bucket_blobs(
+                base, old_sc, cfg.bloom_bits_per_bucket, cfg.bloom_k,
+                kind=cfg.seen_filter_kind,
+            )
+            return store.overwrite("seen_filter", merged)
+
+        fetch_writes = {"extracted": _w_extracted, "seen": _w_seen,
+                        "host_lat": _w_host_lat, "seen_filter": _w_filter}
+        writes = {t: fetch_writes[t] for t in fetch_tables}
+        snap_ids = {}
+
+    # --- commits: the independent table writes run concurrently (driver
+    #     threads; every input is cached, every target table distinct) ---
+    def _w_frontier():
+        return store.overwrite(
+            "frontier",
+            reduce(DataFrame.unionByName, frontier_parts).repartition(par, "url_hash"),
+        )
+
+    log_obs = Observation()
+
+    def _w_log():
+        log = (
+            reduce(DataFrame.unionByName, log_parts)
             .withColumn("round", F.lit(round_n).cast("int"))
             .observe(
                 log_obs,
@@ -762,26 +866,6 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
         )
         return store.append("frontier_log", log, parent=snaps.get("frontier_log"))
 
-    def _w_host_lat():
-        # P4/A3: integer latency EWMA per host (pinned formula, config.py).
-        # Hosts fetched this round fold their obs into the running EWMA;
-        # untouched hosts carry theirs forward unchanged.
-        obs = fetched.groupBy("host").agg(
-            F.expr("sum(latency_ms) DIV count(1)").alias("obs_ms")
-        )
-        if host_lat_prev is not None:
-            prev = host_lat_prev.select("host", F.col("ewma_ms").alias("prev_ms"))
-            merged = obs.join(prev, "host", "full_outer").select(
-                "host",
-                F.when(F.col("obs_ms").isNull(), F.col("prev_ms"))
-                .when(F.col("prev_ms").isNull(), F.col("obs_ms"))
-                .otherwise(F.expr("(obs_ms + prev_ms) DIV 2"))
-                .alias("ewma_ms"),
-            )
-        else:
-            merged = obs.select("host", F.col("obs_ms").alias("ewma_ms"))
-        return store.overwrite("host_lat", merged.repartition(max(2, par // 8)))
-
     def _w_robots():
         return store.append(
             "robots",
@@ -790,50 +874,22 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
             parent=snaps["robots"],
         )
 
-    def _w_filter():
-        # bloom sidecar update (VERDICT r2 #1): fresh keys cogroup with the
-        # previous sidecar on bucket and OR-merge INSIDE the grouped-map —
-        # per-bucket end to end, the driver only records the snapshot id
-        base = fresh.select("bucket", "url_hash")
-        old_sc = sidecar_prev
-        if not have_sidecar:
-            # first activation (seen just crossed bloom_min_seen, or store
-            # initialized with bloom off): backfill from the FULL seen set —
-            # a partial sidecar would produce false negatives, which the
-            # design forbids
-            base = base.unionByName(seen_keys.select("bucket", "url_hash"))
-            old_sc = empty_sidecar(spark)
-        merged = merge_bucket_blobs(
-            base, old_sc, cfg.bloom_bits_per_bucket, cfg.bloom_k,
-            kind=cfg.seen_filter_kind,
-        )
-        return store.overwrite("seen_filter", merged)
-
-    with ThreadPoolExecutor(max_workers=7) as pool:
-        futs = {
-            "extracted": pool.submit(_w_extracted),
-            "seen": pool.submit(_w_seen),
-            "frontier": pool.submit(_w_frontier),
-            "frontier_log": pool.submit(_w_log),
-        }
-        if cfg.adaptive_budget:
-            futs["host_lat"] = pool.submit(_w_host_lat)
-        if cfg.obey_robots:
-            futs["robots"] = pool.submit(_w_robots)
-        if use_bloom:
-            futs["seen_filter"] = pool.submit(_w_filter)
-        snap_ids = {k: f.result() for k, f in futs.items()}
-    filter_snap = snap_ids.get("seen_filter")
+    writes.update(frontier=_w_frontier, frontier_log=_w_log)
     if cfg.obey_robots:
-        robots_snap = snap_ids["robots"]
+        writes["robots"] = _w_robots
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futs = {t: pool.submit(w) for t, w in writes.items()}
+        snap_ids.update({t: f.result() for t, f in futs.items()})
+    if cfg.obey_robots:
         counts.append(("robots_fetched", -1, int(robots_obs.get["n"])))
     else:
-        robots_snap = snaps["robots"]  # unchanged — re-commit the same snapshot
+        snap_ids["robots"] = snaps["robots"]  # unchanged — re-commit the same snapshot
     n_fetched = int(log_obs.get["ok"] or 0)
     n_http_err = int(log_obs.get["http_err"] or 0)
     n_retried = int(log_obs.get["retried"] or 0)
     n_redirected = int(log_obs.get["redirected"] or 0)
-    assert n_fetched == int(ext_obs.get["n"])  # extracted rows == 2xx hits
+    if not idle:
+        assert n_fetched == int(ext_obs.get["n"])  # extracted rows == 2xx hits
     counts.append(("fetched", -1, n_fetched))
     counts.append(("http_error", -1, n_http_err))
     counts.append(("retried", -1, n_retried))
@@ -892,20 +948,11 @@ def one_round(spark: SparkSession, store: SnapStore, cfg: CrawlConfig,
     summary["queued_end"] = int(queued_end)
     summary["round"] = round_n
     summary["seen_total"] = seen_total + summary.get("enqueued", 0)
-    tables = {
-        "frontier": snap_ids["frontier"], "seen": snap_ids["seen"],
-        "robots": robots_snap, "extracted": snap_ids["extracted"],
-        "frontier_log": snap_ids["frontier_log"], "metrics": met_snap,
-    }
-    if "host_lat" in snap_ids:
-        tables["host_lat"] = snap_ids["host_lat"]
-    if filter_snap is not None:
-        tables["seen_filter"] = filter_snap
-    store.commit_round(round_n, tables, meta={k: int(v) for k, v in summary.items()})
+    store.commit_round(
+        round_n, {**snap_ids, "metrics": met_snap},
+        meta={k: int(v) for k, v in summary.items()},
+    )
 
-    to_unpersist = [work, scheduled, fetched, cand0, labeled1, new_robots]
-    if use_bloom and have_sidecar:
-        to_unpersist.append(rank1)
     for df in to_unpersist:
         if df is not None:
             df.unpersist()

@@ -191,6 +191,12 @@ class SnapStore:
             raise FileNotFoundError(f"no snapshot for table {table!r}")
         man = self._load_manifest(table, snap_id)
         paths = [os.path.join(self._tdir(table), rel) for rel in man["files"]]
+        from pyspark.sql import types as T
+
+        schema = T.StructType.fromJson(man["schema"])
+        for col in man["partition_by"]:
+            if col not in schema.fieldNames():
+                schema = schema.add(col, T.IntegerType())
         # a snapshot of an empty DataFrame has a data dir with no parquet
         # files — drop those and fall back to the manifest schema
         live = [
@@ -198,20 +204,18 @@ class SnapStore:
             if glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
         ]
         if not live:
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(man["schema"])
-            for col in man["partition_by"]:
-                if col not in schema.fieldNames():
-                    schema = schema.add(col, T.IntegerType())
             return spark.createDataFrame([], schema=schema)
+        # the manifest records the schema every file of the snapshot was
+        # written with: pinning it skips Spark's schema inference, which is
+        # a footer-reading Spark job per scanned directory
+        reader = spark.read.schema(schema)
         if not man["partition_by"] or len(live) == 1:
-            return spark.read.parquet(*live)
+            return reader.parquet(*live)
         # multiple hive-partitioned roots: Spark's partition discovery wants
         # one root per read — scan each snapshot dir and union (same shape a
         # real Iceberg table scan produces: a union of manifests' file scans;
         # partition pruning still applies per scan)
-        dfs = [spark.read.parquet(p) for p in live]
+        dfs = [reader.parquet(p) for p in live]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

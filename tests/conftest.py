@@ -15,3 +15,17 @@ def spark():
     s = get_spark(cores=4, app="sparkcrawl-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def job_ids(spark):
+    """Returns a function giving the ids of every Spark job the session has
+    launched so far. It drains the listener bus first, so no finished job
+    is still missing from the status tracker."""
+    sc = spark.sparkContext
+
+    def ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    return ids

@@ -202,6 +202,77 @@ def test_resume_equals_uninterrupted(spark, corpus, crawled, golden, tmp_path_fa
     assert seen == golden.seen
 
 
+def test_idle_round_equals_oracle_with_flat_job_counts(
+    spark, corpus, tmp_path_factory, monkeypatch, job_ids
+):
+    """Round 0 of an obey_robots crawl schedules nothing. With the sitemap
+    leg off it is an idle round: no fetch, link or dedup legs, the
+    fetch-side tables re-committed unchanged. Crawling that round alone,
+    then resuming to completion, must equal the oracle; the idle round
+    stays a handful of jobs, and fetch rounds cost the same number of jobs
+    however many seen snapshots have piled up."""
+    from dataclasses import replace
+
+    import sparkcrawl.crawl as C
+    from pyspark.sql import types as T
+
+    cfg = CrawlConfig(round_size=1000, bloom_min_seen=0, sitemap_enabled=False)
+    store_dir = str(tmp_path_factory.mktemp("store_idle"))
+    jobs: dict[int, int] = {}
+    one_round = C.one_round
+
+    def counted(*a, **k):
+        before = max(job_ids(), default=-1)
+        out = one_round(*a, **k)
+        jobs[out["round"]] = sum(1 for j in job_ids() if j > before)
+        return out
+
+    monkeypatch.setattr(C, "one_round", counted)
+    run_crawl(spark, corpus, store_dir, replace(cfg, max_rounds=1))
+    store = SnapStore(store_dir)
+    man0 = store.round_manifest(0)
+    assert man0["meta"]["scheduled"] == 0
+    assert man0["tables"]["seen"] == store.round_manifest(-1)["tables"]["seen"]
+    assert store.read_at_round(spark, "extracted", 0).count() == 0
+    run_crawl(spark, corpus, store_dir, cfg, resume=True)
+
+    o = oracle_crawl(corpus, cfg)
+    got = spark_rounds(spark, store)
+    for i, g in enumerate(o.rounds):
+        assert got.get(i, []) == g, f"round {i}"
+    assert set(got) <= set(range(len(o.rounds)))
+    seen = {r["canon"] for r in store.read(spark, "seen").select("canon").collect()}
+    assert seen == o.seen
+    # the chain starts at the driver-written empty round-0 snapshot
+    text = store.read(spark, "extracted").select("canon", "text").collect()
+    assert {r["canon"]: r["text"] for r in text} == o.text
+    rows = (
+        store.read(spark, "metrics")
+        .groupBy("round", "key")
+        .agg(F.sum("n").alias("n"))
+        .collect()
+    )
+    metrics: dict[int, dict[str, int]] = {}
+    for r in rows:
+        metrics.setdefault(r["round"], {})[r["key"]] = r["n"]
+    for m in o.metrics:
+        for key, want in m.items():
+            if key != "round":
+                assert metrics[m["round"]].get(key, 0) == want, (m["round"], key)
+    # the empty round-0 snapshot has the schema fetch rounds append with
+    first, last = (
+        T.StructType.fromJson(store._load_manifest("extracted", s)["schema"])
+        for s in (man0["tables"]["extracted"], store.latest("extracted"))
+    )
+    assert first.simpleString() == last.simpleString()
+
+    assert sorted(jobs) == list(range(len(o.rounds)))
+    assert jobs[0] <= 10, jobs
+    fetch_rounds = [r for r in jobs if r >= 2]
+    assert len(fetch_rounds) >= 3
+    assert len({jobs[r] for r in fetch_rounds}) == 1, jobs
+
+
 def test_time_travel_reads(spark, crawled):
     store, summaries = crawled
     fr0 = store.read_at_round(spark, "frontier", -1)

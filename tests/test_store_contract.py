@@ -82,6 +82,45 @@ def test_local_commit_interops_with_spark_read(spark, store):
     assert store.read_local("t", s1).num_rows == 1
 
 
+def test_read_pins_manifest_schema(spark, store, job_ids):
+    """read takes each snapshot's schema from its manifest: a
+    bucket-partitioned append chain reads without a Spark job (no
+    per-directory schema inference) and returns exactly what Spark reads
+    from each directory; driver-side commits read back the same way."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    df = spark.createDataFrame(
+        [(i % 4, i, f"v{i}", [f"l{i}", "x"]) for i in range(24)],
+        "bucket int, k long, v string, links array<string>",
+    )
+    for i in range(3):
+        snap = store.append("p", df.filter(df.k % 3 == i), partition_by=["bucket"])
+    before = job_ids()
+    got = store.read(spark, "p", snap)
+    assert job_ids() == before
+    dirs = [
+        os.path.join(store._tdir("p"), rel)
+        for rel in store._load_manifest("p", snap)["files"]
+    ]
+    assert len(dirs) == 3
+    per_dir = [spark.read.parquet(d) for d in dirs]
+    cols = per_dir[0].columns
+    assert all(set(d.columns) == set(got.columns) for d in per_dir)
+    want = sorted(tuple(r) for d in per_dir for r in d.select(*cols).collect())
+    assert sorted(tuple(r) for r in got.select(*cols).collect()) == want
+    assert len(want) == 24
+
+    schema = T.StructType([T.StructField("k", T.IntegerType()),
+                           T.StructField("v", T.StringType())])
+    for k in (1, 2):
+        s = store.append_local("l", pa.table({"k": pa.array([k], pa.int32()),
+                                              "v": pa.array([f"v{k}"], pa.string())}),
+                               schema)
+    assert sorted(tuple(r) for r in store.read(spark, "l", s).collect()) == [
+        (1, "v1"), (2, "v2")]
+
+
 def test_expire_snapshots_keeps_live_reads_and_removes_orphans(spark, store, tmp_path):
     """Expiry must delete superseded + orphaned data dirs while the kept
     snapshot reads identically (VERDICT r2 #5)."""
